@@ -290,8 +290,10 @@ object AntelopeAbi {
     var pos = 0
     def exhausted: Boolean = pos >= bytes.length
     def remaining: Int = bytes.length - pos
+    // `pos + n` would wrap for a forged length near Int.MaxValue and let
+    // `take` allocate it; compare against what is left instead
     private def check(n: Int): Unit =
-      if (pos + n > bytes.length) throw AbiError("unexpected end of data")
+      if (n < 0 || n > bytes.length - pos) throw AbiError("unexpected end of data")
     def u8: Int = { check(1); val b = bytes(pos) & 0xff; pos += 1; b }
     def take(n: Int): Array[Byte] = {
       check(n)

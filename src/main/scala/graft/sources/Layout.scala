@@ -136,6 +136,62 @@ object Layout {
       .write.mode(SaveMode.Overwrite).parquet(dir)
   }
 
+  /** Commit a staged partitioned write into `dir` by directory moves:
+    * for every partition named in `replaced` or present in `staged`,
+    * delete `dir/<col>=<v>`, then rename the staged partition into its
+    * place if the staged write has rows for it (a replaced partition
+    * without staged rows is simply deleted); finally drop `staged`.
+    * Driver-side filesystem metadata work only: no job runs and no row
+    * is read or written again (Spark's dynamic partition overwrite commits
+    * the same way, after a second write).
+    *
+    * Not atomic across partitions: a crash mid-install leaves some
+    * partitions new and some old, and at most one deleted but not yet
+    * renamed. [[rollForward]] finishes such an install, because `staged`
+    * keeps its `_SUCCESS` marker until every partition has moved.
+    * `replaced` holds partition directory values as the writer names
+    * them (`__kb=7` → "7").
+    */
+  def install(
+      dir: String,
+      staged: String,
+      partitionCol: String,
+      replaced: Iterable[String])(implicit spark: SparkSession): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dir)
+    val stagedRoot = new Path(staged)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = partitionCol + "="
+    val moved =
+      if (!fs.exists(stagedRoot)) Set.empty[String]
+      else fs.listStatus(stagedRoot)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+        .map(_.getPath.getName).toSet
+    fs.mkdirs(root)
+    (replaced.map(prefix + _).toSet ++ moved).foreach { name =>
+      val target = new Path(root, name)
+      fs.delete(target, true)
+      if (moved(name) && !fs.rename(new Path(stagedRoot, name), target))
+        throw new java.io.IOException(s"could not move $staged/$name into $dir")
+    }
+    fs.delete(stagedRoot, true)
+  }
+
+  /** Finish what a crash interrupted before a new write to `dir` starts:
+    * a `staged` directory with `_SUCCESS` is a committed write whose
+    * [[install]] did not complete — install it; one without `_SUCCESS` is
+    * an uncommitted write — drop it. Idempotent.
+    */
+  def rollForward(dir: String, staged: String, partitionCol: String)(
+      implicit spark: SparkSession): Unit = {
+    import org.apache.hadoop.fs.Path
+    val stagedRoot = new Path(staged)
+    val fs = stagedRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(stagedRoot, "_SUCCESS")))
+      install(dir, staged, partitionCol, Nil)
+    else fs.delete(stagedRoot, true)
+  }
+
   /** Compaction for the `__kb`-bucketed state layout
     * ([[graft.streaming.ParquetStateSink]]) — the engine-side analogue of
     * the reference's index-lifecycle rollover/shrink: every touched-bucket
@@ -145,14 +201,19 @@ object Layout {
     *
     * One filesystem listing (metadata-sized) finds the fragmented buckets
     * — more files than their byte volume justifies at `targetFileBytes` —
-    * and ONE job rewrites exactly those partitions to the right file
-    * count, through the same staging + dynamic-partition-overwrite dance
-    * the sink itself uses (Spark refuses to overwrite a path feeding the
-    * running plan). The bucket VALUES are untouched — rows never move
-    * between buckets, so the persisted nBuckets marker and the sink's
-    * partition-pruning contract survive compaction by construction.
+    * and ONE job writes exactly those partitions, at the right file count,
+    * to a staging directory that [[install]] then moves into place (Spark
+    * refuses to overwrite a path feeding the running plan). The bucket
+    * VALUES are untouched — rows never move between buckets, so the
+    * persisted nBuckets marker and the sink's partition-pruning contract
+    * survive compaction by construction.
     *
-    * Returns the number of buckets rewritten (0 = nothing fragmented).
+    * Run it between stream batches, not alongside a running sink. A
+    * compaction cut short by a crash is finished ([[rollForward]]) by the
+    * next call, which must come before the sink resumes.
+    *
+    * Returns the number of distinct buckets rewritten (0 = nothing
+    * fragmented).
     */
   def compact(
       stateDir: String,
@@ -162,12 +223,14 @@ object Layout {
     require(targetFileBytes > 0, "target file size must be positive")
     val root = new Path(stateDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = stateDir + "__compact"
+    rollForward(stateDir, staged, partitionCol)
     if (!fs.exists(root)) return 0
     // same procedure for any single-column partition layout: the state
     // sink's `__kb` buckets (default) or the history table's
     // `block_bucket` ranges — the reference's ILM shrink analogue
     val prefix = partitionCol + "="
-    val fragmented = fs.listStatus(root)
+    def listFragmented() = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       // the null-partition directory can't be addressed by an isin value;
       // leave it alone rather than crash the whole compaction
@@ -181,56 +244,66 @@ object Layout {
           Some((b.getPath.getName.stripPrefix(prefix), need))
         else None
       }
-    if (fragmented.isEmpty) return 0
-    // "any single-column partition layout" includes string-valued ones
-    // (lang=en, source=web): keep integer keys typed (partition pruning
-    // on the native column), fall back to a string-cast key otherwise
-    val allInt = fragmented.forall(f => f._1.forall(_.isDigit) && f._1.nonEmpty)
-    val keyCol = if (allInt) col(partitionCol) else col(partitionCol).cast("string")
-    def keyLit(v: String) = if (allInt) lit(v.toLong) else lit(v)
-    val ids = fragmented.map(f => keyLit(f._1)).toSeq
-    val staged = stateDir + "__compact"
-    // split each bucket across ITS OWN slot count (a metadata-sized map
-    // literal): using the max across buckets would over-split every small
-    // bucket to the largest bucket's count, re-flagging it as fragmented
-    // on the next pass — compaction must reach a fixpoint (return 0)
-    val needByBucket = map(fragmented.flatMap {
-      case (kb, need) => Seq(keyLit(kb), lit(need)) }.toIndexedSeq: _*)
-    val totalSlots = fragmented.map(_._2).sum
-    spark.read.parquet(stateDir).filter(keyCol.isin(ids: _*))
-      .withColumn("__slot", pmod(monotonically_increasing_id(),
-        element_at(needByBucket, keyCol)))
-      .repartition(totalSlots, col(partitionCol), col("__slot"))
-      .drop("__slot")
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged)
-    spark.read.parquet(staged)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(stateDir)
-    fs.delete(new Path(staged), true)
-    graft.Caches.invalidateAll()
-    fragmented.length
+    def rewrite(fragmented: Array[(String, Int)]): Unit = {
+      // "any single-column partition layout" includes string-valued ones
+      // (lang=en, source=web): keep integer keys typed (partition pruning
+      // on the native column), fall back to a string-cast key otherwise
+      val allInt = fragmented.forall(f => f._1.forall(_.isDigit) && f._1.nonEmpty)
+      val keyCol = if (allInt) col(partitionCol) else col(partitionCol).cast("string")
+      def keyLit(v: String) = if (allInt) lit(v.toLong) else lit(v)
+      val ids = fragmented.map(f => keyLit(f._1)).toSeq
+      // split each bucket across ITS OWN slot count (a metadata-sized map
+      // literal): using the max across buckets would over-split every
+      // small bucket to the largest bucket's count
+      val needByBucket = map(fragmented.flatMap {
+        case (kb, need) => Seq(keyLit(kb), lit(need)) }.toIndexedSeq: _*)
+      val totalSlots = fragmented.map(_._2).sum
+      spark.read.parquet(stateDir).filter(keyCol.isin(ids: _*))
+        .withColumn("__slot", pmod(monotonically_increasing_id(),
+          element_at(needByBucket, keyCol)))
+        .repartition(totalSlots, col(partitionCol), col("__slot"))
+        .drop("__slot")
+        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged)
+      install(stateDir, staged, partitionCol, fragmented.map(_._1))
+    }
+    // Fewer files also carry less per-file overhead (footers, dictionary
+    // pages), so at a small target a rewritten bucket can still hold more
+    // files than its smaller byte volume justifies: repeat until no bucket
+    // does. Each pass strictly lowers the file count of the buckets it
+    // rewrites, so the loop ends, at a fixpoint where a second call
+    // returns 0.
+    val rewritten = scala.collection.mutable.Set.empty[String]
+    var fragmented = listFragmented()
+    while (fragmented.nonEmpty) {
+      rewrite(fragmented)
+      rewritten ++= fragmented.map(_._1)
+      fragmented = listFragmented()
+    }
+    if (rewritten.nonEmpty) graft.Caches.invalidateAll()
+    rewritten.size
   }
 
   /** Physical tombstone application — rewrite the NAMED partition
     * buckets keeping only rows that satisfy `keep`; every other bucket's
-    * files are untouched (staged write + dynamic partition overwrite,
-    * the [[compact]] mechanics). This is the "next rewrite" the fork
-    * contract defers to ([[graft.state.Forks.pruneBelowLib]]): once a
-    * forked block falls below LIB, its rows are physically deleted here
-    * and its tombstone dropped, which is what keeps tombstone state
-    * bounded by the reversible window instead of growing with history.
-    * Cost is reversible-window sized — only the listed buckets are read
-    * and rewritten, never the history. Returns buckets rewritten.
+    * files are untouched (staged write + [[install]], the [[compact]]
+    * mechanics; a bucket left with no rows is deleted). This is the "next
+    * rewrite" the fork contract defers to
+    * ([[graft.state.Forks.pruneBelowLib]]): once a forked block falls
+    * below LIB, its rows are physically deleted here and its tombstone
+    * dropped, which is what keeps tombstone state bounded by the
+    * reversible window instead of growing with history. Cost is
+    * reversible-window sized — only the listed buckets are read and
+    * rewritten, never the history. Returns buckets rewritten.
     *
-    * NOT crash-atomic: there is a window between the dynamic partition
-    * overwrite (surviving rows land) and the manual delete of
-    * fully-emptied buckets in which a crash leaves an emptied bucket's
-    * OLD files alive — deleted rows resurrected. The operation is
-    * idempotent-retry safe (re-running with the same `keep` converges:
-    * survivors rewrite to themselves, the emptied bucket is deleted on
-    * the retry), so callers MUST NOT drop the tombstones that produced
-    * `keep` until a run completes without error —
+    * NOT crash-atomic: [[install]] swaps the buckets one at a time, so a
+    * crash mid-install leaves some targeted buckets filtered and others
+    * still holding their OLD files — deleted rows resurrected — and at
+    * most one bucket deleted but not yet replaced, whose surviving rows
+    * are missing from reads. The next call on `dir` first rolls the
+    * committed staging forward ([[rollForward]]), and re-running with the
+    * same `keep` converges (survivors rewrite to themselves, emptied
+    * buckets are deleted), so callers MUST NOT drop the tombstones that
+    * produced `keep` until a run completes without error —
     * [[graft.state.Forks.pruneBelowLib]] honors this by keeping
     * tombstones until the rewrite returns.
     */
@@ -241,6 +314,8 @@ object Layout {
       partitionCol: String = "block_bucket")(
       implicit spark: SparkSession): Int = {
     import org.apache.hadoop.fs.Path
+    val staged = dir + "__rewrite"
+    rollForward(dir, staged, partitionCol)
     if (buckets.isEmpty) return 0
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -248,37 +323,11 @@ object Layout {
     val present = buckets.distinct.filter(b =>
       fs.exists(new Path(root, s"$partitionCol=$b")))
     if (present.isEmpty) return 0
-    val staged = dir + "__rewrite"
-    val stagedRoot = new Path(staged)
-    // capture the schema BEFORE staging: when `keep` eliminates every row
-    // of every targeted bucket the staged root holds no data files and
-    // schema inference on it would throw
-    val srcSchema = spark.read.parquet(dir).schema
-    try {
-      spark.read.parquet(dir)
-        .filter(col(partitionCol).isin(present: _*))
-        .filter(keep)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged)
-      // a bucket whose every row was deleted writes no staged partition —
-      // dynamic overwrite would silently leave its old files alive, so
-      // list survivors from the filesystem and delete the rest directly
-      val survived =
-        if (fs.exists(stagedRoot))
-          fs.listStatus(stagedRoot).map(_.getPath.getName)
-            .filter(_.startsWith(partitionCol + "=")).toSet
-        else Set.empty[String]
-      if (survived.nonEmpty)
-        spark.read.schema(srcSchema).parquet(staged)
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCol).parquet(dir)
-      present.foreach { b =>
-        if (!survived.contains(s"$partitionCol=$b"))
-          fs.delete(new Path(root, s"$partitionCol=$b"), true)
-      }
-    } finally {
-      fs.delete(stagedRoot, true)
-    }
+    spark.read.parquet(dir)
+      .filter(col(partitionCol).isin(present: _*))
+      .filter(keep)
+      .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged)
+    install(dir, staged, partitionCol, present.map(_.toString))
     graft.Caches.invalidateAll()
     present.size
   }

@@ -24,6 +24,10 @@ import org.apache.spark.sql.functions._
   * Contract: `mergeBatch` must be idempotent per batch (Structured
   * Streaming redelivers a batch after a crash-restart) and must apply
   * last-writer-wins on the key columns.
+  *
+  * Batches must arrive in block order. A delete removes its key's row
+  * and keeps no tombstone, so a later batch carrying an OLDER upsert of
+  * that key (deltas merged out of block order) resurrects it.
   */
 trait StateSink {
 
@@ -44,56 +48,79 @@ trait StateSink {
   *      metadata-sized collect);
   *   2. reads ONLY those partitions of the previous state (Catalyst
   *      partition pruning on `__kb`);
-  *   3. merges and rewrites ONLY those partitions (dynamic partition
-  *      overwrite).
+  *   3. merges them with the batch and writes the result ONCE, to the
+  *      sibling `__next` directory, hash-partitioned on `__kb` (one
+  *      shuffle, which the merge's window reuses) so every bucket is one
+  *      file and every core writes;
+  *   4. installs it with driver-side directory moves
+  *      ([[graft.sources.Layout.install]]): per touched bucket, delete
+  *      `__kb=b` and rename `__next/__kb=b` into its place; a touched
+  *      bucket whose keys were all deleted is just deleted.
   * Per-batch work is therefore O(touched buckets), not O(state). The
-  * staging round-trip (`__next`) exists because Spark refuses to
-  * overwrite a path that feeds the plan being written; it also only
-  * carries the touched buckets.
+  * staging directory exists because Spark refuses to overwrite a path
+  * that feeds the plan being written.
+  *
+  * Crash safety: `__next` keeps its `_SUCCESS` marker until every bucket
+  * has moved, so each batch first finishes any install a crash cut short
+  * ([[graft.sources.Layout.rollForward]]). Structured Streaming then
+  * re-runs the interrupted batch, and merging a batch into a state that
+  * already holds it changes nothing. Until that next batch, `read` can
+  * miss the one bucket a crash left deleted but not yet replaced.
   */
 final class ParquetStateSink(
     stateDir: String,
     val keys: Seq[String],
     nBuckets: Int = 256) extends StateSink {
+  import graft.sources.Layout
   import org.apache.hadoop.fs.Path
 
+  private val staged = stateDir + "__next"
+
   def mergeBatch(batch: DataFrame)(implicit spark: SparkSession): Unit = {
+    Layout.rollForward(stateDir, staged, "__kb")
     val keyBucket = pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int")
     val bucketed = batch.withColumn("__kb", keyBucket)
     val touched = bucketed.select(col("__kb")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (touched.nonEmpty) {
-      val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // First batch ever (no state yet) → empty prior. ANY other read
-      // failure — legacy unbucketed layout, corrupt files, transient IO
-      // — must propagate and fail the batch: falling back to "no prior
-      // state" here would let the dynamic overwrite below silently drop
-      // the touched buckets' existing rows.
+      // No state yet, or every key of it deleted → empty prior. ANY other
+      // read failure — legacy unbucketed layout, corrupt files, transient
+      // IO — must propagate and fail the batch: falling back to "no prior
+      // state" here would let the install below silently drop the touched
+      // buckets' existing rows.
       val prev =
-        if (fs.exists(new Path(stateDir)))
-          spark.read.parquet(stateDir).filter(col("__kb").isin(touched: _*))
-        else spark.createDataFrame(
+        if (isEmpty) spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bucketed.schema)
-      val next = StateMerge.merge(prev, bucketed, keys)
-      val tmp = stateDir + "__next"
-      next.write.mode("overwrite").partitionBy("__kb").parquet(tmp)
-      val written = fs.listStatus(new Path(tmp)).map(_.getPath.getName)
-        .filter(_.startsWith("__kb=")).map(_.stripPrefix("__kb=").toInt).toSet
-      if (written.nonEmpty)
-        spark.read.parquet(tmp)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__kb")
-          .parquet(stateDir)
-      // dynamic overwrite only replaces partitions present in `next`;
-      // a bucket whose keys were ALL deleted this batch has no rows
-      // and would keep its stale partition — remove it explicitly
-      (touched.toSet -- written).foreach { b =>
-        fs.delete(new Path(stateDir, s"__kb=$b"), true)
-      }
+        else spark.read.parquet(stateDir).filter(col("__kb").isin(touched: _*))
+      // Both sides hash-partitioned on `__kb`: their union keeps that
+      // partitioning (Spark 4.1+), so the window on (`__kb`, keys) — `__kb` is a pure
+      // function of the keys, so leading with it changes no result — adds
+      // no exchange of its own, and each bucket is written by one task as
+      // one file
+      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      StateMerge.merge(prev.repartition(n, col("__kb")),
+          bucketed.repartition(n, col("__kb")), "__kb" +: keys)
+        .write.mode("overwrite").partitionBy("__kb").parquet(staged)
+      Layout.install(stateDir, staged, "__kb", touched.map(_.toString))
     }
   }
 
+  /** The current state; an empty frame without columns when there is none
+    * (no batch yet, or every key deleted).
+    */
   def read(implicit spark: SparkSession): DataFrame =
-    spark.read.parquet(stateDir)
+    if (isEmpty) spark.emptyDataFrame else spark.read.parquet(stateDir)
+
+  /** No bucket directory and no data file: only metadata such as
+    * `_SUCCESS`, or no directory at all. A flat, unbucketed layout is NOT
+    * empty and fails on the `__kb` filter instead.
+    */
+  private def isEmpty(implicit spark: SparkSession): Boolean = {
+    val root = new Path(stateDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    !fs.exists(root) || fs.listStatus(root).forall { s =>
+      val name = s.getPath.getName
+      !name.startsWith("__kb=") && (name.startsWith("_") || name.startsWith("."))
+    }
+  }
 }

@@ -168,6 +168,24 @@ class ShipWireSpec extends SparkSpec {
     assert(ShipWire.blockRow(Array[Byte](1, 2, 3)).get.corrupt)
   }
 
+  test("a forged 2^31-1 length prefix quarantines instead of allocating 2 GiB") {
+    val frame = ShipWire.fixtureFrame(7L, Seq((1L, 1L, "view")))
+    // result variant index (1 byte), head and LIB positions (36 each),
+    // this/prev optional positions (37 each), the `block` optional flag:
+    // its varuint32 length starts at byte 148. FF FF FF FF 07 = 2^31-1,
+    // for which `pos + n` wraps negative in an Int bounds check
+    val at = 1 + 36 + 36 + 37 + 37 + 1
+    assert(frame(at - 1) === 1, "the `block` optional must be present")
+    val overflow = Array(0xFF, 0xFF, 0xFF, 0xFF, 0x07).map(_.toByte)
+    System.arraycopy(overflow, 0, frame, at, overflow.length)
+    val row = ShipWire.blockRow(frame).get
+    assert(row.corrupt && row.block_num === -1L)
+    // the same prefix on a bare string throws the decoder's own error
+    intercept[AntelopeAbi.AbiError] {
+      AntelopeAbi.binToJson(ShipWire.abi, "string", overflow)
+    }
+  }
+
   test("nested binaries decode against the same ABI (traces hex is valid)") {
     val frame = ShipWire.fixtureFrame(3L, Seq((10L, 2L, "signup")))
     val json = org.json4s.jackson.JsonMethods.parse(ShipWire.decodeResult(frame))

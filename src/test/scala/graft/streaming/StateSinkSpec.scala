@@ -214,4 +214,115 @@ class StateSinkSpec extends SparkSpec {
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
   }
+
+  // ---- the parquet sink's commit: one staged write, installed by moves
+
+  private def kvFrame(rows: (Long, Long, Long, String)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("k", "block_num", "present", "data")
+  }
+
+  private def stateSet(df: DataFrame): Set[(Long, Long, String)] = {
+    import spark.implicits._
+    df.select($"k", $"block_num", $"data").as[(Long, Long, String)].collect().toSet
+  }
+
+  private def hfs(dir: String) = new org.apache.hadoop.fs.Path(dir)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  test("a state whose every key was deleted is an empty prior, not a failure") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_empty").toString
+    val sink = new ParquetStateSink(s"$t/state", Seq("k"), nBuckets = 4)
+    sink.mergeBatch(kvFrame((1L, 10L, 1L, "a"), (2L, 10L, 1L, "b"),
+      (3L, 10L, 1L, "c"), (4L, 10L, 1L, "d")))
+    assert(sink.read.count() === 4L)
+    sink.mergeBatch(kvFrame((1L, 11L, 0L, ""), (2L, 11L, 0L, ""),
+      (3L, 11L, 0L, ""), (4L, 11L, 0L, "")))
+    assert(new java.io.File(s"$t/state").exists(), "the state directory stays")
+    assert(sink.read.count() === 0L)
+    // the third batch used to fail with UNABLE_TO_INFER_SCHEMA
+    sink.mergeBatch(kvFrame((2L, 12L, 1L, "b2"), (5L, 12L, 1L, "e")))
+    assert(stateSet(sink.read) === Set((2L, 12L, "b2"), (5L, 12L, "e")))
+  }
+
+  test("mergeBatch applied twice to the same batch leaves the same state") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_idem").toString
+    val sink = new ParquetStateSink(s"$t/state", Seq("k"), nBuckets = 4)
+    val b1 = kvFrame((1 to 40).map(i => (i.toLong, 10L, 1L, s"v$i")): _*)
+    val b2 = kvFrame((1 to 40 by 3).map(i =>
+      (i.toLong, 20L, if (i % 2 == 0) 0L else 1L, s"w$i")): _*)
+    sink.mergeBatch(b1)
+    sink.mergeBatch(b2)
+    val once = stateSet(sink.read)
+    sink.mergeBatch(b2) // Structured Streaming's redelivery after a crash
+    assert(stateSet(sink.read) === once)
+    assert(once === stateSet(graft.state.StateMerge.fromHistory(b1.unionByName(b2), Seq("k"))))
+  }
+
+  test("a committed __next left half-installed is rolled forward by the next batch") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_roll").toString
+    val stateDir = s"$t/state"
+    val sink = new ParquetStateSink(stateDir, Seq("k"), nBuckets = 4)
+    val b1 = kvFrame((1 to 40).map(i => (i.toLong, 10L, 1L, s"v$i")): _*)
+    val b2 = kvFrame((1 to 40 by 2).map(i =>
+      (i.toLong, 20L, if (i % 4 == 1) 0L else 1L, s"w$i")): _*)
+    sink.mergeBatch(b1)
+    // the committed result of b2's merge, staged as the sink stages it:
+    // its touched buckets, partitioned by the sink's bucket function
+    val bucket = pmod(xxhash64(col("k")), lit(4)).cast("int")
+    val expected = graft.state.StateMerge.fromHistory(b1.unionByName(b2), Seq("k"))
+    val touched = b2.select(bucket).distinct().collect().map(_.getInt(0)).sorted
+    expected.withColumn("__kb", bucket).filter(col("__kb").isin(touched: _*))
+      .write.partitionBy("__kb").parquet(s"${stateDir}__next")
+    val fs = hfs(stateDir)
+    import org.apache.hadoop.fs.Path
+    val staged = touched.filter(b => fs.exists(new Path(s"${stateDir}__next/__kb=$b")))
+    assert(staged.length >= 3, "fixture must stage at least three buckets")
+    // crash mid-install: the first bucket moved, the second deleted but
+    // not yet renamed, the rest untouched
+    fs.delete(new Path(s"$stateDir/__kb=${staged(0)}"), true)
+    fs.rename(new Path(s"${stateDir}__next/__kb=${staged(0)}"),
+      new Path(s"$stateDir/__kb=${staged(0)}"))
+    fs.delete(new Path(s"$stateDir/__kb=${staged(1)}"), true)
+    // the deleted bucket holds keys b2 does not carry: re-merging b2 over
+    // the damaged state alone would lose them
+    val lost = b1.withColumn("__kb", bucket).filter(col("__kb") === staged(1))
+      .join(b2, Seq("k"), "left_anti").count()
+    assert(lost > 0, "fixture must leave b1-only keys in the deleted bucket")
+
+    sink.mergeBatch(b2) // the redelivered batch
+    assert(stateSet(sink.read) === stateSet(expected))
+    assert(!fs.exists(new Path(s"${stateDir}__next")))
+  }
+
+  test("a batch writes one file per non-empty touched bucket and leaves no __next") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_files").toString
+    val stateDir = s"$t/state"
+    val sink = new ParquetStateSink(stateDir, Seq("k"), nBuckets = 8)
+    sink.mergeBatch(kvFrame((1 to 200).map(i => (i.toLong, 10L, 1L, s"v$i")): _*))
+    val fs = hfs(stateDir)
+    import org.apache.hadoop.fs.Path
+    assert(!fs.exists(new Path(s"${stateDir}__next")))
+    val buckets = fs.listStatus(new Path(stateDir)).filter(_.isDirectory)
+    assert(buckets.length === 8)
+    buckets.foreach { b =>
+      val files = fs.listStatus(b.getPath).count(_.getPath.getName.endsWith(".parquet"))
+      assert(files === 1, s"${b.getPath.getName} holds $files parquet files")
+    }
+    // a second batch that empties one bucket and rewrites another
+    val bucket = pmod(xxhash64(col("k")), lit(8)).cast("int")
+    val all = kvFrame((1 to 200).map(i => (i.toLong, 10L, 1L, s"v$i")): _*)
+      .withColumn("__kb", bucket)
+    val emptied = all.filter(col("__kb") === 0).drop("__kb")
+      .withColumn("block_num", lit(11L)).withColumn("present", lit(0L))
+    val rewritten = all.filter(col("__kb") === 1).drop("__kb")
+      .withColumn("block_num", lit(11L)).withColumn("data", lit("x"))
+    sink.mergeBatch(emptied.unionByName(rewritten))
+    assert(!fs.exists(new Path(s"$stateDir/__kb=0")), "an emptied bucket is deleted")
+    assert(!fs.exists(new Path(s"${stateDir}__next")))
+    assert(fs.listStatus(new Path(s"$stateDir/__kb=1"))
+      .count(_.getPath.getName.endsWith(".parquet")) === 1)
+    assert(sink.read.count() === 200L - all.filter(col("__kb") === 0).count())
+    assert(sink.read.filter(col("__kb") === 1 && col("data") =!= "x").count() === 0L)
+  }
 }
