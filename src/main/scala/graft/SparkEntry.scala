@@ -2153,7 +2153,7 @@ object SparkEntry {
   }
 
   /** zstd corpus front door ([[graft.operators.ZstdCodec]], the
-    * from-spec RFC 8878 decoder): every document compresses into its
+    * libzstd member walk): every document compresses into its
     * own CHECKSUMMED zstd frame via the REAL encoder (zstd-jni, on the
     * Spark classpath for parquet; level varied 1–19 by doc_id so raw/
     * RLE/compressed blocks, 1- and 4-stream Huffman literals, and all
@@ -2259,11 +2259,12 @@ object SparkEntry {
     * corpus arrives gzip/zstd/lz4/snappy/bzip2/xz side by side (format
     * = doc_id mod 6), 12 members concatenate per shard with
     * zstd-skippable pads planted in every 3rd shard, and the
-    * magic-sniffing walk routes each member to the matching from-spec
+    * magic-sniffing walk routes each member to the matching member
     * decoder. All six encode legs are REAL reference encoders (JDK
     * gzip, zstd-jni, lz4-java, snappy-java, commons-compress bzip2,
-    * tukaani xz); all six decode legs are the in-repo codecs, so the
-    * md5-anchored oracle gates byte-exactness of every one.
+    * tukaani xz); the decode legs are the member walks in
+    * graft.operators, so the md5-anchored oracle gates byte-exactness
+    * of every one.
     */
   private def qCompressedCorpus(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
@@ -9704,7 +9705,7 @@ object SparkEntry {
          FROM m WHERE corrupt GROUP BY 1
          ORDER BY source""",
     // zstd front door: decode must be byte-exact (checksummed frames
-    // from the real encoder through the from-spec RFC 8878 decoder), so
+    // from the real encoder through the libzstd member walk), so
     // the md5-anchored 32-bit checksum sum replays from the base table;
     // the corrupt set is exactly the planted (doc_id % 97 == 13) class
     "q_zstd_ingest" ->

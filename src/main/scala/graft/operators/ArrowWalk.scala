@@ -37,8 +37,8 @@ package graft.operators
   * BUFFER, codecs LZ4_FRAME and ZSTD — the layouts hub-distributed
   * Feather files ship routinely): each body buffer is
   * `[int64 uncompressed-length][frame]`, length -1 = stored raw;
-  * decompression goes through the repo's own from-spec [[Lz4Codec]] /
-  * [[ZstdCodec]]. Calendar columns decode as their RAW wire integers
+  * decompression goes through [[Lz4Codec]] (in-repo) / [[ZstdCodec]]
+  * (libzstd). Calendar columns decode as their RAW wire integers
   * (date32 = days, date64 = millis, timestamp_{s,ms,us,ns} = the
   * declared unit; tz is metadata) — the caller owns the calendar.
   * Decimal128 decodes to exact BigDecimal (16-byte two's-complement
@@ -339,7 +339,7 @@ object ArrowWalk {
     // body buffer is [int64 LE uncompressed-length][one LZ4-frame /
     // zstd frame]; length -1 marks a buffer the writer stored raw
     // (compression did not pay). codec 0 = LZ4_FRAME, 1 = ZSTD — both
-    // decoded by the repo's own from-spec codecs.
+    // decoded through the repo's member codecs.
     val compT = fb.fieldOffset(batchT, 3)
     val codec: Int =
       if (compT < 0) -1

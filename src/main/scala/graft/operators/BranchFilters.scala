@@ -1,90 +1,28 @@
 package graft.operators
 
-/** The xz/7z BRANCH FILTERS — preprocessors that sit in front of an
-  * LZMA coder in a filter chain (7z bind-pair folders, xz block filter
-  * chains). Decoders only (this engine reads archives); both operate
-  * in place on a whole buffered output.
+import org.tukaani.xz.{DeltaOptions, FilterOptions, X86Options}
+
+/** The 7z BRANCH FILTERS — preprocessors that sit in front of an LZMA
+  * coder in a 7z bind-pair folder — decoded by the tukaani xz
+  * library's raw filter streams (the same filters xz block chains use).
+  * Decoders only (this engine reads archives), over a whole buffered
+  * coder output.
   */
 object BranchFilters {
 
+  private def decode(filter: FilterOptions, buf: Array[Byte]): Array[Byte] =
+    filter.getInputStream(new java.io.ByteArrayInputStream(buf)).readAllBytes()
 
-
-  /** x86 BCJ branch-converter DECODE (the public `Bra86`/xz x86 simple
-    * filter, as 7z coder 0x03030103 — the default companion of LZMA2
-    * for executables in software-mirror archives): the encoder rewrote
-    * E8/E9 call/jmp 32-bit relative displacements into absolute
-    * targets; this walks the buffer once and converts them back,
-    * tracking the 3-bit mask of recent E8/E9 prefix bytes the spec
-    * uses to skip already-converted overlaps. Whole-buffer one-shot
-    * (start ip 0), in place.
+  /** x86 BCJ branch-converter DECODE (7z coder 0x03030103 — the
+    * default companion of LZMA2 for executables in software-mirror
+    * archives): the encoder rewrote E8/E9 call/jmp 32-bit relative
+    * displacements into absolute targets; this converts them back.
+    * Start ip 0.
     */
-  def bcjX86Decode(buf: Array[Byte]): Array[Byte] = {
-    val allowed = Array(true, true, true, false, true, false, false, false)
-    val bitNo = Array(0, 1, 2, 2, 3, 3, 3, 3)
-    def msb(b: Int): Boolean = { val v = b & 0xff; v == 0 || v == 0xff }
-    var prevMask = 0
-    var prevPos = -1
-    val end = buf.length - 5
-    var i = 0
-    while (i <= end) {
-      if ((buf(i) & 0xfe) != 0xe8) { i += 1 }
-      else {
-        val d = i - prevPos
-        var skip = false
-        if ((d & ~3) != 0) prevMask = 0
-        else {
-          prevMask = (prevMask << (d - 1)) & 7
-          if (prevMask != 0) {
-            val b = buf(i + 4 - bitNo(prevMask))
-            if (!allowed(prevMask) || msb(b)) {
-              prevPos = i
-              prevMask = ((prevMask << 1) & 7) | 1
-              skip = true
-            }
-          }
-        }
-        if (!skip) {
-          prevPos = i
-          if (msb(buf(i + 4))) {
-            var src = (buf(i + 1) & 0xff) | ((buf(i + 2) & 0xff) << 8) |
-              ((buf(i + 3) & 0xff) << 16) | ((buf(i + 4) & 0xff) << 24)
-            var dest = 0
-            var fixing = true
-            while (fixing) {
-              dest = src - (i + 5) // decode: absolute → relative
-              if (prevMask == 0) fixing = false
-              else {
-                val index = bitNo(prevMask) * 8
-                val b = (dest >>> (24 - index)) & 0xff
-                if (!msb(b)) fixing = false
-                else src = dest ^ ((1 << (32 - index)) - 1)
-              }
-            }
-            buf(i + 1) = dest.toByte
-            buf(i + 2) = (dest >>> 8).toByte
-            buf(i + 3) = (dest >>> 16).toByte
-            buf(i + 4) = (0 - ((dest >>> 24) & 1)).toByte
-            i += 5
-          } else {
-            prevMask = ((prevMask << 1) & 7) | 1
-            i += 1
-          }
-        } else i += 1
-      }
-    }
-    buf
-  }
+  def bcjX86Decode(buf: Array[Byte]): Array[Byte] = decode(new X86Options(), buf)
 
   /** Delta filter DECODE (7z coder 0x03): `out(i) += out(i - dist)`,
-    * dist = props(0) + 1. In place.
+    * dist = props(0) + 1.
     */
-  def deltaDecode(buf: Array[Byte], dist: Int): Array[Byte] = {
-    var i = dist
-    while (i < buf.length) {
-      buf(i) = (buf(i) + buf(i - dist)).toByte
-      i += 1
-    }
-    buf
-  }
-
+  def deltaDecode(buf: Array[Byte], dist: Int): Array[Byte] = decode(new DeltaOptions(dist), buf)
 }

@@ -5,12 +5,16 @@ package graft.operators
   * LZ4 (low-latency mirrors), framed snappy (Hadoop lineage), bzip2
   * (Wikipedia dumps, pbzip2 shards), and xz (kernel/academic archives)
   * sit side by side, often concatenated shard by shard. This sniffs
-  * each member's magic and routes it to the matching in-repo decoder
+  * each member's magic and routes it to the matching member decoder
   * ([[Warc.inflateMember]] / [[ZstdCodec]] / [[Lz4Codec]] /
   * [[SnappyCodec]] / [[Bzip2Codec]] / [[XzCodec]]), yielding (offset,
-  * format, payload) rows; a member that fails its format's own
-  * integrity gates quarantines and the walk resynchronizes at the next
-  * position where a sniffed magic actually decodes.
+  * format, payload) rows. The JDK inflater and the classpath's codec
+  * libraries (zstd-jni, snappy-java, xz) decode the bytes and each
+  * member decoder reports where its member ends; LZ4, bzip2 and the
+  * snappy framing walk stay in-repo. A member that fails its
+  * format's own integrity gates quarantines and the walk
+  * resynchronizes at the next position where a sniffed magic actually
+  * decodes.
   *
   * At 1000-executor scale members are independent rows (the
   * [[Warc.parseRecords]] splittable-ingest shape), so the mixed walk

@@ -10,9 +10,15 @@ package graft.operators
   * LZ4; `.lz4` is the low-latency corpus interchange format (Hadoop
   * codecs, Kafka, fast dataset mirrors).
   *
-  * Correctness anchor: lz4-java ships on the Spark classpath (shuffle
-  * codec), so the spec round-trips this decoder against the REAL
-  * compressor — both the fast and high-compression encoders, both
+  * Why this decoder is not lz4-java's: lz4-java 1.8 ships on the Spark
+  * classpath (shuffle codec), but its `LZ4FrameInputStream` rejects
+  * linked-block frames ("Dependent block stream is unsupported"), and
+  * linked blocks are the liblz4 frame API's default (`LZ4F_blockLinked`)
+  * and what `lz4 -BD` writes; the linked-block test in Lz4Spec is the
+  * witness. The checksums do come from lz4-java's xxHash32.
+  *
+  * Correctness anchor: the spec round-trips this decoder against the
+  * REAL compressor — both the fast and high-compression encoders, both
   * frame block modes — plus hand-built streams for the corners the
   * reference encoder never emits.
   *
@@ -24,49 +30,8 @@ object Lz4Codec {
   private val FrameMagic = 0x184d2204
   private val SkipMagicBase = 0x184d2a50
 
-  // ------------------------------------------------------------ xxHash32
-
-  private val X1 = 0x9e3779b1
-  private val X2 = 0x85ebca77
-  private val X3 = 0xc2b2ae3d
-  private val X4 = 0x27d4eb2f
-  private val X5 = 0x165667b1
-
-  /** xxHash32 (public algorithm) — LZ4 frame header/block/content
-    * checksums use it with seed 0.
-    */
-  def xxhash32(b: Array[Byte], off: Int, len: Int, seed: Int = 0): Int = {
-    def le32(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    var p = off
-    val end = off + len
-    var acc =
-      if (len >= 16) {
-        var a1 = seed + X1 + X2; var a2 = seed + X2; var a3 = seed; var a4 = seed - X1
-        while (p + 16 <= end) {
-          a1 = Integer.rotateLeft(a1 + le32(p) * X2, 13) * X1
-          a2 = Integer.rotateLeft(a2 + le32(p + 4) * X2, 13) * X1
-          a3 = Integer.rotateLeft(a3 + le32(p + 8) * X2, 13) * X1
-          a4 = Integer.rotateLeft(a4 + le32(p + 12) * X2, 13) * X1
-          p += 16
-        }
-        Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
-          Integer.rotateLeft(a3, 12) + Integer.rotateLeft(a4, 18)
-      } else seed + X5
-    acc += len
-    while (p + 4 <= end) {
-      acc = Integer.rotateLeft(acc + le32(p) * X3, 17) * X4
-      p += 4
-    }
-    while (p < end) {
-      acc = Integer.rotateLeft(acc + (b(p) & 0xff) * X5, 11) * X1
-      p += 1
-    }
-    acc ^= acc >>> 15; acc *= X2
-    acc ^= acc >>> 13; acc *= X3
-    acc ^= acc >>> 16
-    acc
-  }
+  // LZ4 frame header/block/content checksums: xxHash32, seed 0
+  private val xxhash32 = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
 
   // ---------------------------------------------------------- block form
 
@@ -158,7 +123,7 @@ object Lz4Codec {
       var contentSize = -1L
       if (hasContentSize) { contentSize = le(b, p + 2, 8); headerLen += 8 }
       val hc = b(p + headerLen) & 0xff
-      if (((xxhash32(b, p, headerLen) >> 8) & 0xff) != hc) return None
+      if (((xxhash32.hash(b, p, headerLen, 0) >> 8) & 0xff) != hc) return None
       p += headerLen + 1
       val out = new java.io.ByteArrayOutputStream()
       var window = new Array[Byte](0) // linked-block history (<= 64 KiB)
@@ -173,7 +138,7 @@ object Lz4Codec {
           if (bsize > blockMax || p + bsize > b.length) return None
           if (blockChecksum) {
             if (p + bsize + 4 > b.length) return None
-            if (xxhash32(b, p, bsize) != le(b, p + bsize, 4).toInt) return None
+            if (xxhash32.hash(b, p, bsize, 0) != le(b, p + bsize, 4).toInt) return None
           }
           val data =
             if (uncompressed) java.util.Arrays.copyOfRange(b, p, p + bsize)
@@ -202,7 +167,7 @@ object Lz4Codec {
       if (contentSize >= 0 && payload.length.toLong != contentSize) return None
       if (contentChecksum) {
         if (p + 4 > b.length) return None
-        if (xxhash32(payload, 0, payload.length) != le(b, p, 4).toInt) return None
+        if (xxhash32.hash(payload, 0, payload.length, 0) != le(b, p, 4).toInt) return None
         p += 4
       }
       Some((payload, p))

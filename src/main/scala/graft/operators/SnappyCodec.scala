@@ -1,86 +1,28 @@
 package graft.operators
 
-/** Snappy decoder — pure Scala, from-spec: the raw block format (the
-  * varint preamble + literal/copy tag grammar with 1/2/4-byte offsets
-  * and overlap copies) and the framing format (magic stream identifier
-  * chunk, compressed/uncompressed data chunks with their MASKED CRC32C
-  * verified, padding and reserved-skippable chunks, reserved-
-  * unskippable rejection). Snappy is the Hadoop-lineage corpus codec
-  * (parquet/avro/sequence files, Kafka) — the JDK has no decoder
-  * (though it DOES ship CRC32C, which the framing checksums use).
-  *
-  * Correctness anchor: snappy-java ships on the Spark classpath
-  * (parquet codec), so the spec round-trips this decoder against the
-  * REAL compressor's raw blocks, plus hand-built streams for corners.
+/** Snappy member walk: raw blocks decode through snappy-java (on the
+  * Spark classpath as a parquet codec); this object owns the framing
+  * format around them (magic stream identifier chunk, compressed/
+  * uncompressed data chunks with their MASKED CRC32C verified, padding
+  * and reserved-skippable chunks, reserved-unskippable rejection),
+  * because the framing walk is what defines member boundaries in a
+  * concatenated corpus. Snappy is the Hadoop-lineage corpus codec
+  * (parquet/avro/sequence files, Kafka); the JDK ships the CRC32C the
+  * framing checksums use.
   */
 object SnappyCodec {
 
-  // ---------------------------------------------------------- raw block
-
-  /** Decode one raw snappy block: varint uncompressed length, then the
-    * tag stream. Returns the decoded bytes or throws on corruption.
+  /** Decode one raw snappy block in `src[from, until)`: the declared
+    * length is checked against a 128 MiB corrupt-input allocation guard
+    * before anything is allocated. Throws on corruption.
     */
   def decodeRaw(src: Array[Byte], from: Int, until: Int): Array[Byte] = {
-    // varint32 preamble
-    var p = from
-    var len = 0
-    var shift = 0
-    var more = true
-    while (more) {
-      require(p < until && shift <= 28, "corrupt varint length")
-      val x = src(p) & 0xff; p += 1
-      len |= (x & 0x7f) << shift
-      shift += 7
-      more = (x & 0x80) != 0
-    }
+    val len = org.xerial.snappy.Snappy.uncompressedLength(src, from, until - from)
     require(len >= 0 && len <= (1 << 27), "implausible snappy length") // 128 MiB guard
     val out = new Array[Byte](len)
-    var o = 0
-    while (p < until) {
-      val tag = src(p) & 0xff; p += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var n = tag >> 2
-          if (n >= 60) {
-            val extra = n - 59 // 1..4 length bytes
-            require(p + extra <= until, "truncated literal length")
-            n = 0
-            var k = 0
-            while (k < extra) { n |= (src(p + k) & 0xff) << (8 * k); k += 1 }
-            p += extra
-          }
-          n += 1
-          require(p + n <= until && o + n <= len, "literal overrun")
-          System.arraycopy(src, p, out, o, n)
-          p += n; o += n
-        case 1 => // copy, 3-bit length 4..11, 11-bit offset
-          val n = 4 + ((tag >> 2) & 7)
-          require(p < until, "truncated copy1")
-          val offset = ((tag >> 5) << 8) | (src(p) & 0xff); p += 1
-          copy(out, o, offset, n, len); o += n
-        case 2 => // copy, 6-bit length, 2-byte LE offset
-          val n = (tag >> 2) + 1
-          require(p + 2 <= until, "truncated copy2")
-          val offset = (src(p) & 0xff) | ((src(p + 1) & 0xff) << 8); p += 2
-          copy(out, o, offset, n, len); o += n
-        case _ => // copy, 6-bit length, 4-byte LE offset
-          val n = (tag >> 2) + 1
-          require(p + 4 <= until, "truncated copy4")
-          val offset = (src(p) & 0xff) | ((src(p + 1) & 0xff) << 8) |
-            ((src(p + 2) & 0xff) << 16) | ((src(p + 3) & 0xff) << 24)
-          p += 4
-          copy(out, o, offset, n, len); o += n
-      }
-    }
-    require(o == len, s"decoded $o of declared $len bytes")
+    val n = org.xerial.snappy.Snappy.uncompress(src, from, until - from, out, 0)
+    require(n == len, s"decoded $n of declared $len bytes")
     out
-  }
-
-  private def copy(out: Array[Byte], o: Int, offset: Int, n: Int, limit: Int): Unit = {
-    require(offset > 0 && offset <= o, s"copy offset $offset at $o")
-    require(o + n <= limit, "copy overruns output")
-    var i = 0
-    while (i < n) { out(o + i) = out(o + i - offset); i += 1 }
   }
 
   // ------------------------------------------------------------- framed

@@ -1,420 +1,73 @@
 package graft.operators
 
-/** XZ decoder — pure Scala, from-spec (xz file format 1.1.0 + the LZMA
-  * specification): the other classic dump format (Wikipedia history
-  * dumps, kernel archives, academic corpora). Implements the container
-  * in full — stream header/footer with their CRC32 gates, block
-  * headers (filter chain, optional size fields, header CRC), the index
-  * and its cross-check against actually-decoded block sizes, stream
-  * padding and multi-stream concatenation — and the LZMA2 chunk layer
-  * (dict/state/props reset modes, uncompressed chunks) over a complete
-  * LZMA range decoder: the 11-state machine, matched-byte literals,
-  * bit-tree position slots, aligned/direct distance bits, rep-distance
-  * shuffling. All three check types are VERIFIED (CRC32 via the JDK,
-  * CRC64/ECMA-182 implemented here, SHA-256 via the JDK).
+import java.io.ByteArrayInputStream
+import org.tukaani.xz.{BasicArrayCache, LZMA2InputStream, LZMAInputStream, SingleXZInputStream}
+
+/** XZ member walk over the tukaani xz library (on the Spark classpath
+  * via commons-compress): the other classic dump format (Wikipedia
+  * history dumps, kernel archives, academic corpora). The library
+  * verifies the whole container — stream header/footer CRCs, block
+  * headers, every check type, the index cross-check — and decodes any
+  * filter chain it knows (LZMA2 behind x86/ARM/… BCJ or delta); this
+  * object finds each stream's end inside a concatenation and consumes
+  * the stream padding that may follow it.
   *
-  * Filter chains: LZMA2 alone, or one branch-filter prefix —
-  * x86 BCJ (0x04) / delta (0x03), via [[BranchFilters]] — the chains
-  * `.tar.xz` software mirrors emit for binaries. Other BCJ targets,
-  * non-zero BCJ start offsets, and dictionary sizes over 1 GiB
-  * (allocation guard) are rejected, honestly.
-  *
-  * Correctness anchor: the tukaani xz library ships on the Spark
-  * classpath (commons-compress dependency), so the spec round-trips
-  * this decoder against the REAL encoder at presets 0–9 and extreme,
-  * every check type, and multi-stream concatenations.
+  * Allocation guards: dictionaries over 1 GiB are refused before the
+  * decoder allocates them (the library's memory limit), and no member
+  * may decode to more than 1 GiB.
   */
 object XzCodec {
 
-  private val HeaderMagic = Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0)
+  private val MaxOutput = 1 << 30
+  // a 1 GiB dictionary plus 1 MiB for the decoder's own buffers and any
+  // filters ahead of LZMA2; the next dictionary size xz can encode above
+  // 1 GiB is 1.5 GiB, so this admits exactly the dictionaries <= 1 GiB
+  private val MemoryLimitKiB = (MaxOutput >> 10) + 1024
 
-  // -------------------------------------------------------------- CRC64
-
-  // ECMA-182, reflected (the xz CRC64 variant)
-  private val crc64Table: Array[Long] = {
-    val poly = 0xc96c5795d7870f42L
-    val t = new Array[Long](256)
-    var i = 0
-    while (i < 256) {
-      var c = i.toLong
-      var k = 0
-      while (k < 8) { c = (c >>> 1) ^ (if ((c & 1) != 0) poly else 0L); k += 1 }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  def crc64(b: Array[Byte], off: Int, len: Int): Long = {
-    var c = ~0L
-    var i = off
-    while (i < off + len) {
-      c = (c >>> 8) ^ crc64Table(((c ^ b(i)) & 0xff).toInt)
-      i += 1
-    }
-    ~c
-  }
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Int = {
-    val c = new java.util.zip.CRC32()
-    c.update(b, off, len)
-    c.getValue.toInt
-  }
-
-  // ------------------------------------------------------------ varints
-
-  /** xz multibyte integer: 7 bits per byte, LSB first, high bit
-    * continues. Returns (value, bytesRead).
+  /** Read a decoder to its end, failing past `cap` bytes (a corrupt-
+    * input allocation guard for streams that need not declare their
+    * output size).
     */
-  private def varint(b: Array[Byte], pos: Int): (Long, Int) = {
-    var v = 0L
-    var i = 0
-    var done = false
-    while (!done) {
-      require(i < 9 && pos + i < b.length, "corrupt varint")
-      val x = b(pos + i) & 0xff
-      v |= (x & 0x7fL) << (7 * i)
-      i += 1
-      if ((x & 0x80) == 0) done = true
+  private def readCapped(in: java.io.InputStream, cap: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](1 << 16)
+    var n = in.read(buf)
+    while (n >= 0) {
+      require(out.size <= cap - n, s"decoded output over the $cap-byte guard")
+      out.write(buf, 0, n)
+      n = in.read(buf)
     }
-    (v, i)
-  }
-
-  // -------------------------------------------------------- LZMA engine
-
-  /** LZMA range decoder over a bounded byte slice. */
-  private final class RangeDec(b: Array[Byte], var pos: Int, val limit: Int) {
-    var range: Int = -1 // 0xFFFFFFFF
-    var code: Int = 0
-    require(b(pos) == 0, "LZMA chunk must start with a zero byte")
-    pos += 1
-    var i = 0
-    while (i < 4) { code = (code << 8) | (b(pos) & 0xff); pos += 1; i += 1 }
-
-    private def normalize(): Unit = {
-      if ((range & 0xff000000) == 0) {
-        require(pos <= limit, "LZMA chunk overrun")
-        code = (code << 8) | (if (pos < limit) b(pos) & 0xff else 0)
-        pos += 1
-        range <<= 8
-      }
-    }
-    def decodeBit(probs: Array[Short], idx: Int): Int = {
-      val p = probs(idx) & 0xffff
-      val bound = (range >>> 11) * p
-      // unsigned compare code < bound
-      val bit = if ((code ^ Int.MinValue) < (bound ^ Int.MinValue)) 0 else 1
-      if (bit == 0) {
-        range = bound
-        probs(idx) = (p + ((2048 - p) >>> 5)).toShort
-      } else {
-        range -= bound
-        code -= bound
-        probs(idx) = (p - (p >>> 5)).toShort
-      }
-      normalize()
-      bit
-    }
-    def decodeDirect(n: Int): Int = {
-      var res = 0
-      var i = 0
-      while (i < n) {
-        range = range >>> 1
-        code -= range
-        val t = 0 - (code >>> 31) // 0 if code >= 0 (bit 1), -1 if negative (bit 0)
-        code += range & t
-        res = (res << 1) + t + 1
-        normalize()
-        i += 1
-      }
-      res
-    }
-    def bitTree(probs: Array[Short], nBits: Int): Int = {
-      var m = 1
-      var i = 0
-      while (i < nBits) { m = (m << 1) | decodeBit(probs, m); i += 1 }
-      m - (1 << nBits)
-    }
-    def bitTreeReverse(probs: Array[Short], off: Int, nBits: Int): Int = {
-      var m = 1
-      var sym = 0
-      var i = 0
-      while (i < nBits) {
-        val bit = decodeBit(probs, off + m)
-        m = (m << 1) | bit
-        sym |= bit << i
-        i += 1
-      }
-      sym
-    }
-    def finishedClean: Boolean = code == 0
-  }
-
-  private def newProbs(n: Int): Array[Short] = Array.fill[Short](n)(1024)
-
-  /** LZMA decoder state that survives across LZMA2 chunks (until a
-    * state-reset control).
-    */
-  private final class LzmaState(var lc: Int, var lp: Int, var pb: Int) {
-    var state = 0
-    var rep0 = 0; var rep1 = 0; var rep2 = 0; var rep3 = 0
-    var isMatch: Array[Short] = newProbs(12 << 4)
-    var isRep: Array[Short] = newProbs(12)
-    var isRepG0: Array[Short] = newProbs(12)
-    var isRepG1: Array[Short] = newProbs(12)
-    var isRepG2: Array[Short] = newProbs(12)
-    var isRep0Long: Array[Short] = newProbs(12 << 4)
-    var posSlot: Array[Array[Short]] = Array.fill(4)(newProbs(64))
-    var specPos: Array[Short] = newProbs(115)
-    var align: Array[Short] = newProbs(16)
-    var literals: Array[Short] = newProbs(0x300 << (lc + lp))
-    // len coders: [0]=match len, [1]=rep len
-    var lenChoice: Array[Short] = newProbs(2)
-    var lenChoice2: Array[Short] = newProbs(2)
-    var lenLow: Array[Array[Short]] = Array.fill(16)(newProbs(8))
-    var lenMid: Array[Array[Short]] = Array.fill(16)(newProbs(8))
-    var lenHigh: Array[Short] = newProbs(256)
-    var repChoice: Array[Short] = newProbs(2)
-    var repChoice2: Array[Short] = newProbs(2)
-    var repLow: Array[Array[Short]] = Array.fill(16)(newProbs(8))
-    var repMid: Array[Array[Short]] = Array.fill(16)(newProbs(8))
-    var repHigh: Array[Short] = newProbs(256)
-
-    def reset(): Unit = {
-      state = 0; rep0 = 0; rep1 = 0; rep2 = 0; rep3 = 0
-      isMatch = newProbs(12 << 4); isRep = newProbs(12)
-      isRepG0 = newProbs(12); isRepG1 = newProbs(12); isRepG2 = newProbs(12)
-      isRep0Long = newProbs(12 << 4)
-      posSlot = Array.fill(4)(newProbs(64))
-      specPos = newProbs(115); align = newProbs(16)
-      literals = newProbs(0x300 << (lc + lp))
-      lenChoice = newProbs(2); lenChoice2 = newProbs(2)
-      lenLow = Array.fill(16)(newProbs(8)); lenMid = Array.fill(16)(newProbs(8))
-      lenHigh = newProbs(256)
-      repChoice = newProbs(2); repChoice2 = newProbs(2)
-      repLow = Array.fill(16)(newProbs(8)); repMid = Array.fill(16)(newProbs(8))
-      repHigh = newProbs(256)
-    }
-    def setProps(props: Int): Unit = {
-      require(props < 225, "bad LZMA props")
-      lc = props % 9
-      lp = (props / 9) % 5
-      pb = props / 45
-      require(pb <= 4, "bad pb")
-    }
-  }
-
-  /** Output window for one xz block (whole-block buffering). */
-  private final class Window(maxOutput: Int) {
-    var buf = new Array[Byte](1 << 16)
-    var len = 0
-    private def ensure(n: Int): Unit = {
-      require(len.toLong + n <= maxOutput, "block output over decoder cap")
-      if (len + n > buf.length) {
-        var cap = buf.length
-        while (cap < len + n) cap <<= 1
-        buf = java.util.Arrays.copyOf(buf, math.min(cap, maxOutput).max(len + n))
-      }
-    }
-    def put(v: Byte): Unit = { ensure(1); buf(len) = v; len += 1 }
-    def putAll(src: Array[Byte], off: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(src, off, buf, len, n); len += n
-    }
-    def copyMatch(dist: Int, n: Int): Unit = {
-      require(dist > 0 && dist <= len, s"LZMA match distance $dist beyond window $len")
-      ensure(n)
-      var i = 0
-      while (i < n) { buf(len + i) = buf(len + i - dist); i += 1 }
-      len += n
-    }
-    def byteAt(dist: Int): Int = { require(dist > 0 && dist <= len, "lit context distance"); buf(len - dist) & 0xff }
-    def payload: Array[Byte] = java.util.Arrays.copyOf(buf, len)
-  }
-
-  private def decodeLen(rc: RangeDec, choice: Array[Short], choice2: Array[Short],
-      low: Array[Array[Short]], mid: Array[Array[Short]], high: Array[Short],
-      posState: Int): Int = {
-    if (rc.decodeBit(choice, 0) == 0) 2 + rc.bitTree(low(posState), 3)
-    else if (rc.decodeBit(choice2, 0) == 0) 10 + rc.bitTree(mid(posState), 3)
-    else 18 + rc.bitTree(high, 8)
-  }
-
-  /** Decode one LZMA chunk of exactly `unpacked` bytes from
-    * b[from, from+packed). The probability state persists in `st`.
-    * `strictFinish` = require the encoder's chunk-flush alignment
-    * (code == 0, consumed ≤ packed) — true for LZMA2's per-chunk
-    * units; false for a sized LZMA1 stream, which simply stops at the
-    * target length with the range coder mid-state (integrity there is
-    * the 7z folder CRC, as in every public LZMA1 decoder).
-    */
-  private def lzmaChunk(
-      b: Array[Byte], from: Int, packed: Int, unpacked: Int,
-      st: LzmaState, win: Window, strictFinish: Boolean = true): Unit = {
-    val rc = new RangeDec(b, from, from + packed)
-    val posMask = (1 << st.pb) - 1
-    val litPosMask = (1 << st.lp) - 1
-    val target = win.len + unpacked
-    while (win.len < target) {
-      val posState = win.len & posMask
-      if (rc.decodeBit(st.isMatch, (st.state << 4) | posState) == 0) {
-        // literal
-        val prevByte = if (win.len == 0) 0 else win.byteAt(1)
-        val litState = ((win.len & litPosMask) << st.lc) + (prevByte >>> (8 - st.lc))
-        val probsOff = 0x300 * litState
-        var sym = 1
-        if (st.state >= 7) {
-          // matched literal: context from the byte at rep0+1
-          var matchByte = win.byteAt(st.rep0 + 1)
-          var break = false
-          while (!break && sym < 0x100) {
-            matchByte <<= 1
-            val matchBit = (matchByte >> 8) & 1
-            val bit = rc.decodeBit(st.literals, probsOff + ((1 + matchBit) << 8) + sym)
-            sym = (sym << 1) | bit
-            if (matchBit != bit) break = true
-          }
-        }
-        while (sym < 0x100) sym = (sym << 1) | rc.decodeBit(st.literals, probsOff + sym)
-        win.put((sym & 0xff).toByte)
-        st.state = if (st.state < 4) 0 else if (st.state < 10) st.state - 3 else st.state - 6
-      } else {
-        var len = 0
-        if (rc.decodeBit(st.isRep, st.state) == 0) {
-          // new match
-          st.rep3 = st.rep2; st.rep2 = st.rep1; st.rep1 = st.rep0
-          len = decodeLen(rc, st.lenChoice, st.lenChoice2, st.lenLow, st.lenMid, st.lenHigh, posState)
-          val lenState = math.min(len - 2, 3)
-          val slot = rc.bitTree(st.posSlot(lenState), 6)
-          if (slot < 4) st.rep0 = slot
-          else {
-            val nd = (slot >> 1) - 1
-            var dist = (2 | (slot & 1)) << nd
-            if (slot < 14)
-              dist += rc.bitTreeReverse(st.specPos, dist - slot - 1, nd)
-            else {
-              dist += rc.decodeDirect(nd - 4) << 4
-              dist += rc.bitTreeReverse(st.align, 0, 4)
-            }
-            st.rep0 = dist
-          }
-          require(st.rep0 != -1, "end marker inside sized LZMA2 chunk")
-          st.state = if (st.state < 7) 7 else 10
-        } else {
-          // rep match
-          if (rc.decodeBit(st.isRepG0, st.state) == 0) {
-            if (rc.decodeBit(st.isRep0Long, (st.state << 4) | posState) == 0) {
-              // short rep: one byte at rep0
-              st.state = if (st.state < 7) 9 else 11
-              win.copyMatch(st.rep0 + 1, 1)
-              len = -1 // handled
-            }
-          } else {
-            val dist =
-              if (rc.decodeBit(st.isRepG1, st.state) == 0) st.rep1
-              else if (rc.decodeBit(st.isRepG2, st.state) == 0) {
-                val d = st.rep2; st.rep2 = st.rep1; d
-              } else {
-                val d = st.rep3; st.rep3 = st.rep2; st.rep2 = st.rep1; d
-              }
-            st.rep1 = st.rep0
-            st.rep0 = dist
-          }
-          if (len == 0) {
-            len = decodeLen(rc, st.repChoice, st.repChoice2, st.repLow, st.repMid, st.repHigh, posState)
-            st.state = if (st.state < 7) 8 else 11
-          }
-        }
-        if (len > 0) {
-          require(win.len + len <= target, "match overruns chunk size")
-          win.copyMatch(st.rep0 + 1, len)
-        }
-      }
-    }
-    if (strictFinish) {
-      require(rc.pos <= from + packed + 1, "LZMA chunk consumed past its packed size")
-      require(rc.finishedClean, "range coder did not finish clean")
-    }
+    out.toByteArray
   }
 
   /** Classic LZMA1 stream decode to exactly `outSize` bytes (shared
     * with [[SevenZWalk]]: 7z coder 0x030101 — the coder real `7z a`
     * uses for its ENCODED HEADERS — is one sized range-coded stream
     * with a 1-byte lc/lp/pb props prefix in the coder properties; the
-    * dict-size hint in props(1..4) is irrelevant here because the
-    * window buffers the whole output). An end marker before `outSize`
-    * fails the stream (sized 7z folders never carry one).
+    * dict-size hint in props(1..4) is not needed because a window of
+    * `outSize` bytes holds the whole output). An end marker before
+    * `outSize` fails the stream (sized 7z folders never carry one).
     */
   private[operators] def lzma1(b: Array[Byte], from: Int, until: Int,
       propsByte: Int, outSize: Int): Array[Byte] = {
-    val win = new Window(outSize)
-    val st = new LzmaState(0, 0, 0)
-    st.setProps(propsByte)
-    st.reset() // rebuild literal probs at the decoded lc/lp width
-    lzmaChunk(b, from, until - from, outSize, st, win, strictFinish = false)
-    win.payload
+    require(outSize >= 0 && outSize <= MaxOutput, s"7z: lzma1 output size $outSize")
+    new LZMAInputStream(new ByteArrayInputStream(b, from, until - from),
+      outSize.toLong, propsByte.toByte, outSize).readAllBytes()
   }
 
-  /** Raw LZMA2 chunk-sequence decode — both the xz block body (the
-    * bytes after the block header are exactly this grammar) and a 7z
-    * LZMA2 coder's packed stream (shared with [[SevenZWalk]]).
-    * `maxOutput` is an allocation guard only; the window buffers the
-    * whole output.
+  /** Raw LZMA2 chunk-sequence decode of a 7z LZMA2 coder's packed
+    * stream (shared with [[SevenZWalk]]). `maxOutput` bounds the output
+    * and sizes the window, which then holds the whole output; bytes
+    * after the LZMA2 end marker fail the stream.
     */
   private[operators] def lzma2(b: Array[Byte], from: Int, until: Int, maxOutput: Int): Array[Byte] = {
-    val win = new Window(maxOutput)
-    var st: LzmaState = null
-    var needDictReset = true
-    var needProps = true
-    var needStateReset = false // set after uncompressed chunks
-    var p = from
-    var done = false
-    while (!done) {
-      require(p < until, "LZMA2 stream without end marker")
-      val ctrl = b(p) & 0xff; p += 1
-      if (ctrl == 0) done = true
-      else if (ctrl <= 2) {
-        // uncompressed chunk (1 = with dict reset)
-        require(ctrl != 2 || !needDictReset, "chunk before first dict reset")
-        require(p + 2 <= until, "truncated chunk header")
-        val n = (((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)) + 1; p += 2
-        require(p + n <= until, "truncated uncompressed chunk")
-        win.putAll(b, p, n)
-        p += n
-        needDictReset = false
-        // an uncompressed chunk invalidates LZMA state but NOT props:
-        // the next LZMA chunk must carry reset mode >= 1
-        needStateReset = true
-      } else {
-        require(ctrl >= 0x80, "reserved LZMA2 control byte")
-        val unpacked = (((ctrl & 0x1f) << 16) | ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)) + 1
-        val packed = (((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)) + 1
-        p += 4
-        val resetMode = (ctrl >> 5) & 3
-        if (resetMode >= 2) {
-          require(p < until, "truncated props byte")
-          val props = b(p) & 0xff; p += 1
-          if (st == null) st = new LzmaState(0, 0, 0)
-          st.setProps(props)
-          st.reset()
-          needProps = false
-          needStateReset = false
-        } else {
-          require(st != null && !needProps, "LZMA chunk before props")
-          if (resetMode == 1) { st.reset(); needStateReset = false }
-          else require(!needStateReset, "state-carrying chunk after an uncompressed chunk")
-        }
-        if (resetMode == 3) needDictReset = false
-        require(!needDictReset, "LZMA chunk before first dict reset")
-        require(p + packed <= until, "truncated LZMA chunk")
-        lzmaChunk(b, p, packed, unpacked, st, win)
-        p += packed
-      }
-    }
-    require(p == until, "trailing bytes after LZMA2 end marker")
-    win.payload
+    require(maxOutput >= 0 && maxOutput <= MaxOutput, s"7z: lzma2 output size $maxOutput")
+    val src = new ByteArrayInputStream(b, from, until - from)
+    val out = readCapped(new LZMA2InputStream(src,
+      math.max(maxOutput, LZMA2InputStream.DICT_SIZE_MIN)), maxOutput)
+    require(src.available() == 0, "trailing bytes after LZMA2 end marker")
+    out
   }
-
-  // --------------------------------------------------------- container
 
   /** Decode ONE xz stream at byte `pos` (consuming trailing stream
     * padding); Some((payload, nextPos)) or None. Header/footer/block
@@ -423,150 +76,17 @@ object XzCodec {
     */
   def decodeStream(b: Array[Byte], pos: Int): Option[(Array[Byte], Int)] = {
     try {
-      if (b.length - pos < 32) return None
-      var i = 0
-      while (i < 6) { if (b(pos + i) != HeaderMagic(i)) return None; i += 1 }
-      val flagHi = b(pos + 6) & 0xff
-      val check = b(pos + 7) & 0xff
-      if (flagHi != 0) return None
-      val checkSize = check match {
-        case 0x00 => 0
-        case 0x01 => 4
-        case 0x04 => 8
-        case 0x0a => 32
-        case _ => return None // reserved / out-of-spec check ids
-      }
-      if (crc32(b, pos + 6, 2) != le32(b, pos + 8)) return None
-      var p = pos + 12
-      val out = new java.io.ByteArrayOutputStream()
-      // (unpaddedSize, uncompressedSize) per block, for the index check
-      val blockSizes = scala.collection.mutable.Buffer.empty[(Long, Long)]
-      var sawIndex = false
-      while (!sawIndex) {
-        if (p >= b.length) return None
-        val first = b(p) & 0xff
-        if (first == 0) {
-          // index
-          sawIndex = true
-          val idxStart = p
-          p += 1
-          val (cnt, n1) = varint(b, p); p += n1
-          if (cnt != blockSizes.length) return None
-          var k = 0
-          while (k < cnt) {
-            val (unp, a) = varint(b, p); p += a
-            val (unc, c) = varint(b, p); p += c
-            if ((unp, unc) != blockSizes(k)) return None
-            k += 1
-          }
-          while ((p - idxStart) % 4 != 0) { if (b(p) != 0) return None; p += 1 }
-          if (crc32(b, idxStart, p - idxStart) != le32(b, p)) return None
-          p += 4
-          // footer: CRC32(backwardSize+flags) | backwardSize | flags | "YZ"
-          if (b.length - p < 12) return None
-          val footCrc = le32(b, p)
-          if (crc32(b, p + 4, 6) != footCrc) return None
-          // Backward Size = the whole Index field (indicator through its
-          // CRC32); p already advanced past that CRC
-          val backward = (le32(b, p + 4).toLong + 1) * 4
-          if (backward != (p - idxStart).toLong) return None
-          if ((b(p + 8) & 0xff) != 0 || (b(p + 9) & 0xff) != check) return None
-          if (b(p + 10) != 'Y' || b(p + 11) != 'Z') return None
-          p += 12
-        } else {
-          // block
-          val hdrStart = p
-          val hdrSize = (first + 1) * 4
-          if (p + hdrSize > b.length) return None
-          val flags = b(p + 1) & 0xff
-          val nFilters = (flags & 3) + 1
-          if ((flags & 0x3c) != 0) return None // reserved bits
-          var q = p + 2
-          var declaredCompressed = -1L
-          var declaredUncompressed = -1L
-          if ((flags & 0x40) != 0) { val (v, n) = varint(b, q); declaredCompressed = v; q += n }
-          if ((flags & 0x80) != 0) { val (v, n) = varint(b, q); declaredUncompressed = v; q += n }
-          if (nFilters > 2) return None
-          // optional branch-filter prefix (xz ids: 0x04 = x86 BCJ,
-          // 0x03 = delta) — LZMA2 must be the LAST filter in the chain
-          var bcj = false
-          var deltaDist = 0
-          if (nFilters == 2) {
-            val (f0, n0) = varint(b, q); q += n0
-            val (ps0, np0) = varint(b, q); q += np0
-            f0 match {
-              case 0x04 =>
-                if (ps0 != 0) return None // non-zero start ip: subset
-                bcj = true
-              case 0x03 =>
-                if (ps0 != 1) return None
-                deltaDist = (b(q) & 0xff) + 1; q += 1
-              case _ => return None // other BCJ targets / unknown
-            }
-          }
-          val (fid, nf) = varint(b, q); q += nf
-          if (fid != 0x21) return None // LZMA2
-          val (propsSize, np) = varint(b, q); q += np
-          if (propsSize != 1) return None
-          val dictByte = b(q) & 0xff; q += 1
-          if (dictByte > 40) return None
-          val dictSize =
-            if (dictByte == 40) 0xffffffffL
-            else (2L | (dictByte & 1)) << (dictByte / 2 + 11)
-          if (dictSize > (1L << 30)) return None // allocation guard
-          while (q < hdrStart + hdrSize - 4) { if (b(q) != 0) return None; q += 1 }
-          if (crc32(b, hdrStart, hdrSize - 4) != le32(b, hdrStart + hdrSize - 4)) return None
-          p = hdrStart + hdrSize
-          // compressed data: LZMA2 self-delimits; find its end by decode
-          val dataStart = p
-          val dataEnd =
-            if (declaredCompressed >= 0) dataStart + declaredCompressed.toInt
-            else {
-              // walk LZMA2 chunk headers to find the end without decoding
-              var w = dataStart
-              var end = -1
-              while (end < 0) {
-                require(w < b.length, "unterminated LZMA2 chain")
-                val c = b(w) & 0xff
-                if (c == 0) end = w + 1
-                else if (c <= 2) w += 3 + ((((b(w + 1) & 0xff) << 8) | (b(w + 2) & 0xff)) + 1)
-                else {
-                  val packed = (((b(w + 3) & 0xff) << 8) | (b(w + 4) & 0xff)) + 1
-                  w += (if (((c >> 5) & 3) >= 2) 6 else 5) + packed
-                }
-              }
-              end
-            }
-          if (dataEnd > b.length) return None
-          val lzOut = lzma2(b, dataStart, dataEnd, 1 << 30)
-          val payload =
-            if (bcj) BranchFilters.bcjX86Decode(lzOut)
-            else if (deltaDist > 0) BranchFilters.deltaDecode(lzOut, deltaDist)
-            else lzOut
-          if (declaredUncompressed >= 0 && payload.length.toLong != declaredUncompressed) return None
-          p = dataEnd
-          while ((p - hdrStart) % 4 != 0) { if (b(p) != 0) return None; p += 1 }
-          // per-block check over the UNCOMPRESSED data
-          if (p + checkSize > b.length) return None
-          check match {
-            case 0x00 => ()
-            case 0x01 => if (crc32(payload, 0, payload.length) != le32(b, p)) return None
-            case 0x04 => if (crc64(payload, 0, payload.length) != le64(b, p)) return None
-            case _ =>
-              val md = java.security.MessageDigest.getInstance("SHA-256")
-              val want = java.util.Arrays.copyOfRange(b, p, p + 32)
-              if (!java.util.Arrays.equals(md.digest(payload), want)) return None
-          }
-          val unpaddedSize = (dataEnd - hdrStart).toLong + checkSize
-          blockSizes += ((unpaddedSize, payload.length.toLong))
-          p += checkSize
-          out.write(payload)
-        }
-      }
+      val src = new ByteArrayInputStream(b, pos, b.length - pos)
+      // the array cache hands each member the previous member's
+      // dictionary instead of allocating (and zeroing) a fresh one
+      val xz = new SingleXZInputStream(src, MemoryLimitKiB, BasicArrayCache.getInstance())
+      val out = try readCapped(xz, MaxOutput) finally xz.close()
+      // the decoder reads exactly through the stream footer
+      var p = b.length - src.available()
       // stream padding: 4-byte-aligned zeros
       while (p + 4 <= b.length && b(p) == 0 && b(p + 1) == 0 && b(p + 2) == 0 && b(p + 3) == 0)
         p += 4
-      Some((out.toByteArray, p))
+      Some((out, p))
     } catch { case _: Exception => None }
   }
 
@@ -582,15 +102,5 @@ object XzCodec {
       }
     }
     Some(out.toByteArray)
-  }
-
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
-  private def le64(b: Array[Byte], off: Int): Long = {
-    var v = 0L; var k = 0
-    while (k < 8) { v |= (b(off + k) & 0xffL) << (8 * k); k += 1 }
-    v
   }
 }

@@ -106,18 +106,22 @@ object Ingest {
       implicit spark: SparkSession): Unit = {
     import org.apache.hadoop.fs.Path
     val current = checkpointHead(checkpointDir)
-    if (!current.exists(_ >= head)) {
-      val marker = new Path(checkpointDir, "__graft_head")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // write-then-rename: a crash mid-write must never leave a torn
-      // marker under the canonical name (rename is atomic on the
-      // filesystems a checkpoint dir lives on)
-      val tmp = new Path(checkpointDir, s"__graft_head.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(head.toString.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(marker)) fs.delete(marker, false)
-      fs.rename(tmp, marker)
-    }
+    if (!current.exists(_ >= head))
+      writeMarker(new Path(checkpointDir, "__graft_head"), head.toString)
+  }
+
+  /** Write-then-rename: a crash mid-write must never leave a torn
+    * marker under the canonical name (rename is atomic on the
+    * filesystems a checkpoint or state dir lives on).
+    */
+  private def writeMarker(marker: org.apache.hadoop.fs.Path, text: String)(
+      implicit spark: SparkSession): Unit = {
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = marker.suffix(".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(marker)) fs.delete(marker, false)
+    fs.rename(tmp, marker)
   }
 
   /** Action ingest with the DECODE ladder wired end-to-end — the Spark
@@ -241,14 +245,14 @@ object Ingest {
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) {
       val in = fs.open(marker)
-      val persisted =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
+      val text =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
         finally in.close()
-      require(persisted == nBuckets,
-        s"state at $stateDir was bucketed with nBuckets=$persisted; refusing to run with nBuckets=$nBuckets")
-    } else {
-      val out = fs.create(marker, true)
-      try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
-    }
+      val persisted = text.toIntOption
+      require(persisted.isDefined,
+        s"bucket marker $marker is unreadable (expected a bucket count, found '$text')")
+      require(persisted.get == nBuckets,
+        s"state at $stateDir was bucketed with nBuckets=${persisted.get}; refusing to run with nBuckets=$nBuckets")
+    } else writeMarker(marker, nBuckets.toString)
   }
 }

@@ -2,17 +2,19 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One hostile-payload contract for EVERY from-spec byte decoder: pure
-  * random bytes, bit-flipped valid payloads, and truncated valid
-  * payloads. A decoder may decode or may quarantine (None / empty /
-  * thrown Exception, per its documented surface), but it must never
-  * raise a non-Exception Throwable — StackOverflow from forged
-  * recursion, OutOfMemory from forged length fields — the
+/** One hostile-payload contract for EVERY byte decoder, in-repo or
+  * library-backed: pure random bytes, bit-flipped valid payloads, and
+  * truncated valid payloads. A decoder may decode or may quarantine
+  * (None / empty / thrown Exception, per its documented surface), but
+  * it must never raise a non-Exception Throwable — StackOverflow from
+  * forged recursion, OutOfMemory from forged length fields — the
   * executor-killing classes the quarantine ladders exist to prevent.
   * Complements the per-codec conformance specs and the existing
   * Multimodal / ArrowWalk / MetaFilter fuzz suites. Valid payloads come
   * from the same real/foreign encoders the conformance specs use, so
-  * the mutation space sits on genuine format structure.
+  * the mutation space sits on genuine format structure. Random
+  * mutation rarely forges a length field behind a valid checksum, so
+  * each library-backed path also gets one hand-forged length.
   */
 class CodecFuzzSpec extends AnyFunSuite {
 
@@ -142,4 +144,89 @@ class CodecFuzzSpec extends AnyFunSuite {
     out.write(docA); out.close()
     Seq(mem.toByteArray)
   })(b => Bzip2Codec.decode(b).isDefined)
+
+  contract("SnappyCodec.decodeFramed",
+    Seq(SnappyCodec.encodeFramed(docA),
+      SnappyCodec.encodeFramed(docB, chunk = 64, compress = false)))(
+    b => SnappyCodec.decodeFramed(b).isDefined)
+
+  // one member of every format, a zstd skippable pad between two of them
+  contract("Codecs.members", {
+    val gz = {
+      val mem = new java.io.ByteArrayOutputStream()
+      val out = new java.util.zip.GZIPOutputStream(mem)
+      out.write(docA); out.close(); mem.toByteArray
+    }
+    val zst = {
+      val ctx = new com.github.luben.zstd.ZstdCompressCtx()
+      try { ctx.setChecksum(true); ctx.compress(docB) } finally ctx.close()
+    }
+    val lz4 = {
+      val mem = new java.io.ByteArrayOutputStream()
+      val out = new net.jpountz.lz4.LZ4FrameOutputStream(mem)
+      out.write(docA); out.close(); mem.toByteArray
+    }
+    val bz2 = {
+      val mem = new java.io.ByteArrayOutputStream()
+      val out = new org.apache.commons.compress.compressors.bzip2
+        .BZip2CompressorOutputStream(mem, 1)
+      out.write(docB); out.close(); mem.toByteArray
+    }
+    val xz = {
+      val mem = new java.io.ByteArrayOutputStream()
+      val out = new org.tukaani.xz.XZOutputStream(mem, new org.tukaani.xz.LZMA2Options(1))
+      out.write(docA); out.close(); mem.toByteArray
+    }
+    val pad = Array[Byte](0x50, 0x2a, 0x4d, 0x18, 2, 0, 0, 0, 7, 7)
+    Seq(gz ++ zst ++ pad ++ lz4 ++ SnappyCodec.encodeFramed(docB) ++ bz2 ++ xz,
+      xz ++ SnappyCodec.encodeFramed(docA) ++ xz)
+  })(b => { val m = Codecs.members(b); m.nonEmpty && m.forall(_._3 != null) })
+
+  /** A forged length field must quarantine before the decoder allocates
+    * what it declares: the decoding thread may allocate at most 64 MiB.
+    */
+  private def forged(name: String, payloads: => Seq[Array[Byte]])(
+      decodes: Array[Byte] => Boolean): Unit =
+    test(s"$name: a forged length quarantines without allocating it") {
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+        .asInstanceOf[com.sun.management.ThreadMXBean]
+      payloads.foreach { p =>
+        val before = mx.getCurrentThreadAllocatedBytes
+        val ok = try decodes(p) catch { case _: Exception => false }
+        val allocated = mx.getCurrentThreadAllocatedBytes - before
+        assert(!ok, "a forged payload must quarantine")
+        assert(allocated < (64L << 20), s"decoding allocated $allocated bytes")
+      }
+    }
+
+  private def le(v: Long, n: Int): Array[Byte] = Array.tabulate(n)(i => (v >>> (8 * i)).toByte)
+
+  // Frame_Content_Size over the 1 GiB guard, then one empty last raw block
+  forged("ZstdCodec.decodeFrame Frame_Content_Size",
+    Seq(1L << 40, (1L << 30) + 1).map(fcs =>
+      le(0xfd2fb528L, 4) ++ Array(0xe0.toByte) ++ le(fcs, 8) ++ Array[Byte](1, 0, 0)))(
+    b => ZstdCodec.decodeFrame(b, 0).isDefined)
+
+  // a raw block whose varint length is 2^31-1, inside a framed stream
+  forged("SnappyCodec.decodeFramed varint length", {
+    val raw = Array[Byte](-1, -1, -1, -1, 7, 0, 'a')
+    val chunk = Array[Byte](0) ++ le(4 + raw.length, 3) ++ le(0, 4) ++ raw
+    Seq(SnappyCodec.encodeFramed(Array.emptyByteArray) ++ chunk)
+  })(b => SnappyCodec.decodeFramed(b).isDefined)
+
+  // the block header's LZMA2 dictionary byte patched to 37 (1.5 GiB)
+  forged("XzCodec.decode dictionary size", {
+    val mem = new java.io.ByteArrayOutputStream()
+    val out = new org.tukaani.xz.XZOutputStream(mem, new org.tukaani.xz.LZMA2Options(0))
+    out.write(docA); out.close()
+    val z = mem.toByteArray
+    // stream header (12 bytes), then: size byte, flags, LZMA2 id, props size, dict
+    assert(z(13) == 0 && z(14) == 0x21 && z(15) == 1, "one-filter block header")
+    z(16) = 37
+    val hdrEnd = 12 + (z(12) + 1) * 4 - 4
+    val crc = new java.util.zip.CRC32()
+    crc.update(z, 12, hdrEnd - 12)
+    System.arraycopy(le(crc.getValue, 4), 0, z, hdrEnd, 4)
+    Seq(z)
+  })(b => XzCodec.decode(b).isDefined)
 }

@@ -4,10 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop}
 import org.xerial.snappy.Snappy
 
-/** The from-spec snappy decoder against the REAL compressor
-  * (snappy-java, on the Spark classpath as a parquet codec): raw block
-  * grammar over every entropy regime, the framing format with its
-  * masked CRC32C gates, and corruption behavior.
+/** Snappy against the REAL compressor (snappy-java, on the Spark
+  * classpath as a parquet codec): raw blocks over every entropy
+  * regime, the in-repo framing walk with its masked CRC32C gates, and
+  * corruption behavior.
   */
 class SnappySpec extends AnyFunSuite {
 

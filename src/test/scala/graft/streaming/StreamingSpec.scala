@@ -252,6 +252,26 @@ class IngestSpec extends SparkSpec {
     assert(e.getMessage.contains("nBuckets=4"))
   }
 
+  test("a torn (empty) bucket marker fails the start with a message naming the marker") {
+    // a crash between create and close of an in-place marker write left
+    // exactly this file; it must not surface as a NumberFormatException
+    val tmp = java.nio.file.Files.createTempDirectory("graft_state_torn").toString
+    val stateDir = s"$tmp/state"
+    val marker = java.nio.file.Paths.get(stateDir + "__meta", "nbuckets")
+    java.nio.file.Files.createDirectories(marker.getParent)
+    java.nio.file.Files.createFile(marker)
+    val rawDir = s"$tmp/deltas"
+    Fixtures.deltas(spark, 10).write.parquet(rawDir)
+    val stream = spark.readStream
+      .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
+    val e = intercept[IllegalArgumentException] {
+      Ingest.startStateMerge(stream, stateDir, s"$tmp/ckpt",
+        keys = Seq("code", "table", "scope", "primary_key"), nBuckets = 4)
+    }
+    assert(e.getMessage.contains("__meta/nbuckets") && e.getMessage.contains("unreadable"),
+      e.getMessage)
+  }
+
   test("a broken prior state fails the batch instead of silently dropping rows") {
     // legacy layout with no __kb column: the filter must fail the batch
     // (the old catch-all would have treated it as 'no prior state' and the
