@@ -5389,8 +5389,8 @@ object SparkEntry {
     val finished = graft.streaming.StreamScale.withShuffleWidth(s, width) {
       graft.streaming.Ingest.startStateMerge(
         s.readStream.schema(all.schema).option("maxFilesPerTrigger", "1").parquet(raw),
-        state, ckpt, keys = Seq("code", "table", "scope", "primary_key"),
-        nBuckets = 8).awaitTermination(180000)
+        state, ckpt, keys = Seq("code", "table", "scope", "primary_key"))
+        .awaitTermination(180000)
     }
     require(finished, "state merge did not finish within 180s — " +
       "refusing to read a partial state")

@@ -36,11 +36,14 @@ object AccountEndpoints {
       .select(col("account"), col("recent_actions"), col("tokens"), col("links"))
   }
 
-  /** GET /v2/history/get_transaction (J2): all actions of a trx_id merged
-    * with a 1-row chain-state frame (last irreversible block) — the
-    * reference's parallel get_info + ES search collapse into a scalar
-    * cross join; with a block-bucket hint the scan prunes to one
-    * partition (the reference's `block_hint`).
+  /** GET /v2/history/get_transaction (J2): all actions of a trx_id, each
+    * carrying the chain state's last irreversible block as a literal
+    * column — the reference's parallel get_info + ES search collapse into
+    * one scan with no join. A block hint (the reference's `block_hint`)
+    * adds a range predicate on `block_num` covering the hint's
+    * `partitionSize` bucket; it prunes parquet row groups by their
+    * `block_num` statistics, not partitions (the scan's
+    * `PartitionFilters` stay empty).
     */
   def getTransaction(
       actions: DataFrame,
@@ -51,16 +54,14 @@ object AccountEndpoints {
     val normalized = lower(lit(trxId))
     val base = blockHint match {
       case Some(b) =>
-        // partition-pruning predicate, mirrors hot/hinted index selection
+        // row-group range predicate, mirrors hot/hinted index selection
         val bucket = b / partitionSize
         actions.filter(col("block_num").between(bucket * partitionSize,
           (bucket + 1) * partitionSize - 1))
       case None => actions
     }
-    val libFrame = base.sparkSession.range(1)
-      .select(lit(lib).as("last_irreversible_block"))
     base.filter(lower(col("trx_id")) === normalized)
-      .crossJoin(broadcast(libFrame))
+      .withColumn("last_irreversible_block", lit(lib))
       .withColumn("irreversible", col("block_num") <= col("last_irreversible_block"))
       .orderBy(col("global_sequence"))
   }
@@ -76,9 +77,9 @@ object AccountEndpoints {
     * `producer_block_id`) fills the rest. The LIB scalar rides every
     * row — the reference's parallel `get_info`.
     *
-    * Plan: inherits [[getTransaction]]'s block-hint partition pruning;
-    * the explode is narrow (one trx's receipts), so the whole route
-    * stays one pruned scan + a broadcast of the 1-row LIB frame.
+    * Plan: inherits [[getTransaction]]'s block-hint row-group range
+    * predicate; the explode is narrow (one trx's receipts), so the whole
+    * route stays one scan with the LIB as a literal column.
     */
   def getTransactionV1(
       actions: DataFrame,

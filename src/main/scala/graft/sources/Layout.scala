@@ -137,44 +137,59 @@ object Layout {
   }
 
   /** Commit a staged partitioned write into `dir` by directory moves:
-    * for every partition named in `replaced` or present in `staged`,
-    * delete `dir/<col>=<v>`, then rename the staged partition into its
-    * place if the staged write has rows for it (a replaced partition
-    * without staged rows is simply deleted); finally drop `staged`.
-    * Driver-side filesystem metadata work only: no job runs and no row
-    * is read or written again (Spark's dynamic partition overwrite commits
-    * the same way, after a second write).
+    * every partition directory in `staged` replaces its namesake — delete
+    * `dir/<col>=<v>`, then rename the staged directory into its place, or,
+    * when it holds no file ([[stageDeletes]]), drop it, so the partition is
+    * simply deleted; finally drop `staged`. Driver-side filesystem
+    * metadata work only: no job runs and no row is read or written again
+    * (Spark's dynamic partition overwrite commits the same way, after a
+    * second write).
     *
     * Not atomic across partitions: a crash mid-install leaves some
     * partitions new and some old, and at most one deleted but not yet
-    * renamed. [[rollForward]] finishes such an install, because `staged`
-    * keeps its `_SUCCESS` marker until every partition has moved.
-    * `replaced` holds partition directory values as the writer names
-    * them (`__kb=7` → "7").
+    * renamed. [[rollForward]] finishes such an install, because every
+    * staged directory, empty ones included, stays until its partition has
+    * moved, and `staged` keeps its commit marker until all have.
     */
-  def install(
-      dir: String,
-      staged: String,
-      partitionCol: String,
-      replaced: Iterable[String])(implicit spark: SparkSession): Unit = {
+  def install(dir: String, staged: String, partitionCol: String)(
+      implicit spark: SparkSession): Unit = {
     import org.apache.hadoop.fs.Path
     val root = new Path(dir)
     val stagedRoot = new Path(staged)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = partitionCol + "="
-    val moved =
-      if (!fs.exists(stagedRoot)) Set.empty[String]
+    val parts =
+      if (!fs.exists(stagedRoot)) Array.empty[Path]
       else fs.listStatus(stagedRoot)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-        .map(_.getPath.getName).toSet
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
+        .map(_.getPath)
     fs.mkdirs(root)
-    (replaced.map(prefix + _).toSet ++ moved).foreach { name =>
-      val target = new Path(root, name)
+    parts.foreach { p =>
+      val target = new Path(root, p.getName)
       fs.delete(target, true)
-      if (moved(name) && !fs.rename(new Path(stagedRoot, name), target))
-        throw new java.io.IOException(s"could not move $staged/$name into $dir")
+      if (fs.listStatus(p).isEmpty) fs.delete(p, true)
+      else if (!fs.rename(p, target))
+        throw new java.io.IOException(s"could not move $p into $dir")
     }
     fs.delete(stagedRoot, true)
+  }
+
+  /** Mark partitions of a staged write as replaced even where the write
+    * left them without rows: an empty `staged/<col>=<v>` directory for
+    * each value of `replaced` the write did not produce, which
+    * [[install]] turns into a delete of `<col>=<v>`. `replaced` holds
+    * partition directory values as the writer names them (`__kb=7` →
+    * "7").
+    */
+  def stageDeletes(staged: String, partitionCol: String, replaced: Iterable[String])(
+      implicit spark: SparkSession): Unit = {
+    import org.apache.hadoop.fs.Path
+    val stagedRoot = new Path(staged)
+    val fs = stagedRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val written =
+      if (!fs.exists(stagedRoot)) Set.empty[String]
+      else fs.listStatus(stagedRoot).map(_.getPath.getName).toSet
+    replaced.map(v => s"$partitionCol=$v").filterNot(written)
+      .foreach(name => fs.mkdirs(new Path(stagedRoot, name)))
   }
 
   /** Finish what a crash interrupted before a new write to `dir` starts:
@@ -188,15 +203,16 @@ object Layout {
     val stagedRoot = new Path(staged)
     val fs = stagedRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(stagedRoot, "_SUCCESS")))
-      install(dir, staged, partitionCol, Nil)
+      install(dir, staged, partitionCol)
     else fs.delete(stagedRoot, true)
   }
 
   /** Compaction for the `__kb`-bucketed state layout
     * ([[graft.streaming.ParquetStateSink]]) — the engine-side analogue of
-    * the reference's index-lifecycle rollover/shrink: every touched-bucket
-    * rewrite leaves a few small files behind, and after enough
-    * micro-batches a bucket is hundreds of film-sized parquet parts that
+    * the reference's index-lifecycle rollover/shrink: the sink writes one
+    * file per touched bucket, but its bucket split leaves each new bucket
+    * one file per scan split that fed it, and a layout written by many
+    * tasks holds hundreds of film-sized parquet parts per bucket that
     * wreck scan parallelism.
     *
     * One filesystem listing (metadata-sized) finds the fragmented buckets
@@ -205,8 +221,10 @@ object Layout {
     * to a staging directory that [[install]] then moves into place (Spark
     * refuses to overwrite a path feeding the running plan). The bucket
     * VALUES are untouched — rows never move between buckets, so the
-    * persisted nBuckets marker and the sink's partition-pruning contract
-    * survive compaction by construction.
+    * bucket count in the sink's `__meta/nbuckets` marker and its
+    * partition-pruning contract survive compaction by construction.
+    * Compaction never changes the count: only the sink grows it, by a
+    * split that commits through the same [[install]].
     *
     * Run it between stream batches, not alongside a running sink. A
     * compaction cut short by a crash is finished ([[rollForward]]) by the
@@ -264,7 +282,7 @@ object Layout {
         .repartition(totalSlots, col(partitionCol), col("__slot"))
         .drop("__slot")
         .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged)
-      install(stateDir, staged, partitionCol, fragmented.map(_._1))
+      install(stateDir, staged, partitionCol)
     }
     // Fewer files also carry less per-file overhead (footers, dictionary
     // pages), so at a small target a rewritten bucket can still hold more
@@ -327,7 +345,8 @@ object Layout {
       .filter(col(partitionCol).isin(present: _*))
       .filter(keep)
       .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged)
-    install(dir, staged, partitionCol, present.map(_.toString))
+    stageDeletes(staged, partitionCol, present.map(_.toString))
+    install(dir, staged, partitionCol)
     graft.Caches.invalidateAll()
     present.size
   }

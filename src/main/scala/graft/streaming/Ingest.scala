@@ -114,7 +114,7 @@ object Ingest {
     * marker under the canonical name (rename is atomic on the
     * filesystems a checkpoint or state dir lives on).
     */
-  private def writeMarker(marker: org.apache.hadoop.fs.Path, text: String)(
+  private[streaming] def writeMarker(marker: org.apache.hadoop.fs.Path, text: String)(
       implicit spark: SparkSession): Unit = {
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = marker.suffix(".tmp")
@@ -194,6 +194,8 @@ object Ingest {
 
   /** Start a state-table maintenance stream: delta rows → last-writer-wins
     * compacted state at `stateDir`, via the default [[ParquetStateSink]].
+    * The sink owns the state's bucket count; an unreadable bucket marker
+    * or a bucketed layout without one fails here, before the stream starts.
     *
     * This is the parquet specialization of [[startStateSink]]; an
     * ES/Delta/Iceberg writer swaps in by passing a different [[StateSink]]
@@ -204,16 +206,11 @@ object Ingest {
       stateDir: String,
       checkpointDir: String,
       keys: Seq[String],
-      nBuckets: Int = 256,
       trigger: Trigger = Trigger.AvailableNow())(
       implicit spark: SparkSession): StreamingQuery = {
-    // The bucket layout is a pure function of nBuckets; a run with a
-    // different value would prune reads to the WRONG partitions and leave
-    // stale rows behind (two rows per key). Persist it once and fail fast
-    // on mismatch rather than corrupt silently.
-    checkBucketMarker(stateDir, nBuckets)
-    startStateSink(deltas, new ParquetStateSink(stateDir, keys, nBuckets),
-      checkpointDir, trigger)
+    val sink = new ParquetStateSink(stateDir, keys)
+    sink.buckets // validates the marker before the stream starts
+    startStateSink(deltas, sink, checkpointDir, trigger)
   }
 
   /** Start a state-maintenance stream against ANY keyed-upsert sink —
@@ -233,26 +230,4 @@ object Ingest {
         sink.mergeBatch(batch)
       }
       .start()
-
-  /** Persisted alongside the state so a later run cannot silently re-bucket
-    * with a different modulus (which would break last-writer-wins: a key's
-    * fresh row lands in a new bucket while its stale row survives the old).
-    */
-  private def checkBucketMarker(stateDir: String, nBuckets: Int)(
-      implicit spark: SparkSession): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(stateDir + "__meta", "nbuckets")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      val persisted = text.toIntOption
-      require(persisted.isDefined,
-        s"bucket marker $marker is unreadable (expected a bucket count, found '$text')")
-      require(persisted.get == nBuckets,
-        s"state at $stateDir was bucketed with nBuckets=${persisted.get}; refusing to run with nBuckets=$nBuckets")
-    } else writeMarker(marker, nBuckets.toString)
-  }
 }

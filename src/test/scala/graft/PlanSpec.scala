@@ -247,4 +247,17 @@ class PlanSpec extends SparkSpec {
     // only other hash exchanges sit inside broadcast builds (eval-sized)
     assert(topLevelHashExchanges(p).size === 3, s"expected 3 corpus shuffles in:\n$p")
   }
+
+  test("get_transaction: the LIB is a literal column, no broadcast join") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_trx").toString
+    graft.etl.ActionDedup.mergeReceipts(graft.etl.Fixtures.rawTraces(spark, 40, 20, 2))
+      .write.mode("overwrite").parquet(dir)
+    val t = graft.query.AccountEndpoints.getTransaction(spark.read.parquet(dir),
+      "trx00000003", lib = 150L, blockHint = Some(103L), partitionSize = 100L)
+    val p = t.queryExecution.executedPlan.toString
+    assert(!p.contains("BroadcastExchange"), p)
+    assert(!p.contains("Join"), p)
+    assert(t.columns.takeRight(2).toSeq === Seq("last_irreversible_block", "irreversible"))
+    assert(t.head().getAs[Long]("last_irreversible_block") === 150L)
+  }
 }

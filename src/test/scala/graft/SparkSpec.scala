@@ -23,6 +23,15 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = TestSession.spark
 
+  /** Give a state that has no bucket yet an `n`-bucket layout, by writing
+    * the bucket marker [[graft.streaming.ParquetStateSink]] resumes from.
+    */
+  def seedBuckets(stateDir: String, n: Int): Unit = {
+    val marker = java.nio.file.Paths.get(stateDir + "__meta", "nbuckets")
+    java.nio.file.Files.createDirectories(marker.getParent)
+    java.nio.file.Files.writeString(marker, n.toString)
+  }
+
   /** Hash-partition exchanges NOT nested inside a broadcast build — the
     * corpus-sized shuffles of a plan string. Exchanges under a
     * BroadcastExchange only reorganize a small build side (an eval-set

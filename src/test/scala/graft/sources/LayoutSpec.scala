@@ -74,7 +74,8 @@ class LayoutSpec extends SparkSpec {
     import graft.streaming.ParquetStateSink
     val dir = tmp("compact")
     val keys = Seq("code", "table", "scope", "primary_key")
-    val sink = new ParquetStateSink(dir, keys, nBuckets = 4)
+    seedBuckets(dir, 4)
+    val sink = new ParquetStateSink(dir, keys)
     val deltas = (0 until 2000)
       .map(i => ("c", "t", "s", s"k$i", 100L + i, 1, s"v$i"))
       .toDF("code", "table", "scope", "primary_key", "block_num", "present", "data")

@@ -54,13 +54,15 @@ class RouterScaleSpec extends SparkSpec with BeforeAndAfterAll {
       .toDF("sub_id", "contract", "action")
 
   test("route and routeByTopic agree row-for-row at 200 subscriptions") {
-    val byBranch = Router.route(events, subscriptions(200))
-      .select($"seq", $"sub_id")
-    val byTopic = Router.routeByTopic(events, subTable(200))
-      .select($"seq", $"sub_id")
-    assert(byBranch.count() === byTopic.count())
-    assert(byBranch.except(byTopic).count() === 0)
-    assert(byTopic.except(byBranch).count() === 0)
+    // compared as collected, sorted multisets: an `except` over the
+    // 250-branch union pushes its anti join into every branch, 500
+    // broadcasts built on the driver, enough to starve the test JVM
+    def rows(df: DataFrame): Seq[(Long, String)] =
+      df.select($"seq", $"sub_id").as[(Long, String)].collect().toSeq.sorted
+    val byBranch = rows(Router.route(events, subscriptions(200)))
+    val byTopic = rows(Router.routeByTopic(events, subTable(200)))
+    assert(byBranch.nonEmpty)
+    assert(byBranch === byTopic)
   }
 
   test("plan shape: topic map stays two joins at 10k subs; route grows one branch per sub") {

@@ -44,7 +44,8 @@ class StateSinkSpec extends SparkSpec {
     def stream = spark.readStream
       .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
 
-    val parquetSink = new ParquetStateSink(s"$tmp/state", keyCols, nBuckets = 8)
+    seedBuckets(s"$tmp/state", 8)
+    val parquetSink = new ParquetStateSink(s"$tmp/state", keyCols)
     Ingest.startStateSink(stream, parquetSink, s"$tmp/ckpt_p")
       .awaitTermination(60000)
     val memorySink = new NaiveMemorySink(keyCols)
@@ -67,7 +68,8 @@ class StateSinkSpec extends SparkSpec {
     def stream = spark.readStream
       .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
 
-    val parquetSink = new ParquetStateSink(s"$tmp/state", keyCols, nBuckets = 8)
+    seedBuckets(s"$tmp/state", 8)
+    val parquetSink = new ParquetStateSink(s"$tmp/state", keyCols)
     Ingest.startStateSink(stream, parquetSink, s"$tmp/ckpt_p")
       .awaitTermination(60000)
     val bulkSink = new BulkStateSink(s"$tmp/es", keyCols)
@@ -204,9 +206,9 @@ class StateSinkSpec extends SparkSpec {
     Fixtures.deltas(spark, 60).write.parquet(rawDir)
     def stream = spark.readStream
       .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
-    Ingest.startStateMerge(stream, s"$tmp/state", s"$tmp/ckpt", keyCols, nBuckets = 4)
+    Ingest.startStateMerge(stream, s"$tmp/state", s"$tmp/ckpt", keyCols)
       .awaitTermination(60000)
-    val viaSink = new ParquetStateSink(s"$tmp/state2", keyCols, nBuckets = 4)
+    val viaSink = new ParquetStateSink(s"$tmp/state2", keyCols)
     Ingest.startStateSink(stream, viaSink, s"$tmp/ckpt2")
       .awaitTermination(60000)
     val a = spark.read.parquet(s"$tmp/state")
@@ -232,7 +234,8 @@ class StateSinkSpec extends SparkSpec {
 
   test("a state whose every key was deleted is an empty prior, not a failure") {
     val t = java.nio.file.Files.createTempDirectory("graft_sink_empty").toString
-    val sink = new ParquetStateSink(s"$t/state", Seq("k"), nBuckets = 4)
+    seedBuckets(s"$t/state", 4)
+    val sink = new ParquetStateSink(s"$t/state", Seq("k"))
     sink.mergeBatch(kvFrame((1L, 10L, 1L, "a"), (2L, 10L, 1L, "b"),
       (3L, 10L, 1L, "c"), (4L, 10L, 1L, "d")))
     assert(sink.read.count() === 4L)
@@ -247,7 +250,8 @@ class StateSinkSpec extends SparkSpec {
 
   test("mergeBatch applied twice to the same batch leaves the same state") {
     val t = java.nio.file.Files.createTempDirectory("graft_sink_idem").toString
-    val sink = new ParquetStateSink(s"$t/state", Seq("k"), nBuckets = 4)
+    seedBuckets(s"$t/state", 4)
+    val sink = new ParquetStateSink(s"$t/state", Seq("k"))
     val b1 = kvFrame((1 to 40).map(i => (i.toLong, 10L, 1L, s"v$i")): _*)
     val b2 = kvFrame((1 to 40 by 3).map(i =>
       (i.toLong, 20L, if (i % 2 == 0) 0L else 1L, s"w$i")): _*)
@@ -262,7 +266,8 @@ class StateSinkSpec extends SparkSpec {
   test("a committed __next left half-installed is rolled forward by the next batch") {
     val t = java.nio.file.Files.createTempDirectory("graft_sink_roll").toString
     val stateDir = s"$t/state"
-    val sink = new ParquetStateSink(stateDir, Seq("k"), nBuckets = 4)
+    seedBuckets(stateDir, 4)
+    val sink = new ParquetStateSink(stateDir, Seq("k"))
     val b1 = kvFrame((1 to 40).map(i => (i.toLong, 10L, 1L, s"v$i")): _*)
     val b2 = kvFrame((1 to 40 by 2).map(i =>
       (i.toLong, 20L, if (i % 4 == 1) 0L else 1L, s"w$i")): _*)
@@ -276,6 +281,8 @@ class StateSinkSpec extends SparkSpec {
       .write.partitionBy("__kb").parquet(s"${stateDir}__next")
     val fs = hfs(stateDir)
     import org.apache.hadoop.fs.Path
+    // the sink's commit record: the staged write is complete, bucketed 4 ways
+    Ingest.writeMarker(new Path(s"${stateDir}__next", "_nbuckets"), "4")
     val staged = touched.filter(b => fs.exists(new Path(s"${stateDir}__next/__kb=$b")))
     assert(staged.length >= 3, "fixture must stage at least three buckets")
     // crash mid-install: the first bucket moved, the second deleted but
@@ -298,7 +305,8 @@ class StateSinkSpec extends SparkSpec {
   test("a batch writes one file per non-empty touched bucket and leaves no __next") {
     val t = java.nio.file.Files.createTempDirectory("graft_sink_files").toString
     val stateDir = s"$t/state"
-    val sink = new ParquetStateSink(stateDir, Seq("k"), nBuckets = 8)
+    seedBuckets(stateDir, 8)
+    val sink = new ParquetStateSink(stateDir, Seq("k"))
     sink.mergeBatch(kvFrame((1 to 200).map(i => (i.toLong, 10L, 1L, s"v$i")): _*))
     val fs = hfs(stateDir)
     import org.apache.hadoop.fs.Path
@@ -324,5 +332,171 @@ class StateSinkSpec extends SparkSpec {
       .count(_.getPath.getName.endsWith(".parquet")) === 1)
     assert(sink.read.count() === 200L - all.filter(col("__kb") === 0).count())
     assert(sink.read.filter(col("__kb") === 1 && col("data") =!= "x").count() === 0L)
+  }
+
+  // ---- the bucket count: derived from the state's bytes, grown by splits
+
+  /** Every row sits in bucket `pmod(xxhash64(k), n)` for the count `n` the
+    * sink reports, and no staged write is left behind.
+    */
+  private def assertLayout(stateDir: String, sink: ParquetStateSink): Unit = {
+    val n = sink.buckets
+    val misplaced = spark.read.parquet(stateDir)
+      .filter(col("__kb") =!= pmod(xxhash64(col("k")), lit(n)).cast("int")).count()
+    assert(misplaced === 0L, s"rows outside their $n-way bucket")
+    assert(!hfs(stateDir).exists(new org.apache.hadoop.fs.Path(s"${stateDir}__next")))
+  }
+
+  /** Deterministic, incompressible payloads, so the state's bytes grow
+    * with its rows.
+    */
+  private def payload(k: Int, v: Int) =
+    java.util.UUID.nameUUIDFromBytes(s"$k/$v".getBytes("UTF-8")).toString
+
+  private def withMaxPartitionBytes[A](v: String)(body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("the bucket count grows from 1 as the state outgrows one scan split") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_grow").toString
+    val stateDir = s"$t/state"
+    val sink = new ParquetStateSink(stateDir, Seq("k"))
+    assert(sink.buckets === 1)
+    withMaxPartitionBytes("4k") {
+      var history = kvFrame()
+      val counts = (1 to 5).map { i =>
+        // 150 new keys, plus an update or a delete of every fifth older one
+        val fresh = ((i - 1) * 150 + 1 to i * 150).map(k =>
+          (k.toLong, 10L * i, 1L, payload(k, i)))
+        val older = (1 to (i - 1) * 150 by 5).map(k =>
+          (k.toLong, 10L * i, if (k % 2 == 0) 0L else 1L, payload(k, i)))
+        val batch = kvFrame(fresh ++ older: _*)
+        sink.mergeBatch(batch)
+        history = history.unionByName(batch)
+        assert(stateSet(sink.read) ===
+          stateSet(graft.state.StateMerge.fromHistory(history, Seq("k"))), s"batch $i")
+        assertLayout(stateDir, sink)
+        sink.buckets
+      }
+      assert(counts.last >= 4, s"counts per batch: $counts")
+      assert(counts === counts.sorted, s"the count never shrinks: $counts")
+    }
+  }
+
+  /** 240 keys none of which hashes to bucket 3 of 8: every key of old
+    * bucket 3 (of 4) moves to bucket 7 in a split, so the split empties it.
+    */
+  private def splitKeys: IndexedSeq[Long] = {
+    import spark.implicits._
+    spark.range(1, 2000)
+      .select(col("id"), pmod(xxhash64(col("id")), lit(8)).cast("int").as("b"))
+      .filter(col("b") =!= 3).select(col("id")).as[Long].collect().take(240).toIndexedSeq
+  }
+
+  test("a split deletes the old buckets it empties") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_split").toString
+    val stateDir = s"$t/state"
+    seedBuckets(stateDir, 4)
+    val sink = new ParquetStateSink(stateDir, Seq("k"))
+    val b1 = kvFrame(splitKeys.map(k => (k, 10L, 1L, payload(k.toInt, 1))): _*)
+    withMaxPartitionBytes("1k")(sink.mergeBatch(b1))
+    assert(sink.buckets >= 8)
+    assert(!new java.io.File(s"$stateDir/__kb=3").exists(), "the emptied old bucket is deleted")
+    assertLayout(stateDir, sink)
+    assert(stateSet(sink.read) === stateSet(b1))
+  }
+
+  /** A 4-bucket state after two batches over [[splitKeys]], and its split
+    * to 8 buckets staged in `__next` as the sink stages it: one write of
+    * every bucket, with an empty staged directory for old bucket 3, which
+    * the split empties. Returns the sink, the second batch and the model's
+    * state.
+    */
+  private def stagedSplit(stateDir: String) = {
+    val keys = splitKeys
+    seedBuckets(stateDir, 4)
+    val sink = new ParquetStateSink(stateDir, Seq("k"))
+    val b1 = kvFrame(keys.map(k => (k, 10L, 1L, s"v$k")): _*)
+    val b2 = kvFrame(keys.zipWithIndex.collect {
+      case (k, i) if i % 3 == 0 => (k, 20L, if (i % 2 == 0) 0L else 1L, s"w$k")
+    }: _*)
+    sink.mergeBatch(b1)
+    sink.mergeBatch(b2)
+    val fs = hfs(stateDir)
+    import org.apache.hadoop.fs.Path
+    assert(fs.exists(new Path(s"$stateDir/__kb=3")), "old bucket 3 must hold rows")
+    val old = (0 until 4).map(_.toString)
+    spark.read.parquet(stateDir)
+      .withColumn("__kb", pmod(xxhash64(col("k")), lit(8)).cast("int"))
+      .write.partitionBy("__kb").parquet(s"${stateDir}__next")
+    graft.sources.Layout.stageDeletes(s"${stateDir}__next", "__kb", old)
+    assert(fs.listStatus(new Path(s"${stateDir}__next/__kb=3")).isEmpty,
+      "the split must leave old bucket 3 empty")
+    val model = stateSet(graft.state.StateMerge.fromHistory(b1.unionByName(b2), Seq("k")))
+    (sink, b2, model)
+  }
+
+  test("a split staged but not committed is dropped: old layout, old count") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_split_a").toString
+    val stateDir = s"$t/state"
+    val (sink, b2, model) = stagedSplit(stateDir)
+    sink.mergeBatch(b2) // the redelivered batch
+    assert(stateSet(sink.read) === model)
+    assert(sink.buckets === 4)
+    assertLayout(stateDir, sink)
+  }
+
+  test("a split committed before the marker moved completes with its count") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_split_b").toString
+    val stateDir = s"$t/state"
+    val (sink, b2, model) = stagedSplit(stateDir)
+    Ingest.writeMarker(new org.apache.hadoop.fs.Path(s"${stateDir}__next", "_nbuckets"), "8")
+    assert(sink.buckets === 4, "the marker has not moved yet")
+    sink.mergeBatch(b2)
+    assert(stateSet(sink.read) === model)
+    assert(sink.buckets === 8)
+    assertLayout(stateDir, sink)
+    assert(!new java.io.File(s"$stateDir/__kb=3").exists(), "the emptied old bucket is deleted")
+  }
+
+  test("a marker lost mid-replacement resumes at the committed split's count") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_split_d").toString
+    val stateDir = s"$t/state"
+    val (sink, b2, model) = stagedSplit(stateDir)
+    Ingest.writeMarker(new org.apache.hadoop.fs.Path(s"${stateDir}__next", "_nbuckets"), "8")
+    // the marker's replacement deletes the old file before renaming the new
+    java.nio.file.Files.delete(java.nio.file.Paths.get(stateDir + "__meta", "nbuckets"))
+    assert(sink.buckets === 8)
+    sink.mergeBatch(b2)
+    assert(stateSet(sink.read) === model)
+    assert(sink.buckets === 8)
+    assertLayout(stateDir, sink)
+  }
+
+  test("a split cut short mid-install is rolled forward, emptied buckets deleted") {
+    val t = java.nio.file.Files.createTempDirectory("graft_sink_split_c").toString
+    val stateDir = s"$t/state"
+    val (sink, b2, model) = stagedSplit(stateDir)
+    val fs = hfs(stateDir)
+    import org.apache.hadoop.fs.Path
+    Ingest.writeMarker(new Path(s"${stateDir}__next", "_nbuckets"), "8")
+    seedBuckets(stateDir, 8) // the marker moves before any bucket does
+    // crash mid-install: bucket 0 moved, bucket 1 deleted but not yet
+    // renamed, bucket 4 moved, the rest (emptied bucket 3 included) untouched
+    def move(b: Int): Unit = {
+      fs.delete(new Path(s"$stateDir/__kb=$b"), true)
+      fs.rename(new Path(s"${stateDir}__next/__kb=$b"), new Path(s"$stateDir/__kb=$b"))
+    }
+    move(0)
+    fs.delete(new Path(s"$stateDir/__kb=1"), true)
+    move(4)
+    sink.mergeBatch(b2)
+    assert(stateSet(sink.read) === model)
+    assert(sink.buckets === 8)
+    assertLayout(stateDir, sink)
+    assert(!fs.exists(new Path(s"$stateDir/__kb=3")), "the emptied old bucket is deleted")
   }
 }

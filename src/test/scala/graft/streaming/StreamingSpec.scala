@@ -197,9 +197,10 @@ class IngestSpec extends SparkSpec {
       val stream = spark.readStream
         .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
       Ingest.startStateMerge(stream, stateDir, ckpt,
-        keys = Seq("code", "table", "scope", "primary_key"), nBuckets = 4)
+        keys = Seq("code", "table", "scope", "primary_key"))
         .awaitTermination(60000)
     }
+    seedBuckets(stateDir, 4)
     run(deltas, 1)
     // materialize on the driver: caching the DataFrame would be wrong —
     // the post-rewrite read of the same path canonicalizes to the same
@@ -235,21 +236,54 @@ class IngestSpec extends SparkSpec {
     assert(afterRows === keptBefore, "untouched buckets must carry over unchanged")
   }
 
-  test("state merge refuses to run against a layout bucketed with a different nBuckets") {
+  test("state merge resumes at a seeded 4-bucket marker") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_state_nb").toString
     val stateDir = s"$tmp/state"
-    def run(n: Int, nBuckets: Int): Unit = {
+    val keys = Seq("code", "table", "scope", "primary_key")
+    def run(n: Int): Unit = {
       val rawDir = s"$tmp/deltas$n"; val ckpt = s"$tmp/ckpt$n"
-      Fixtures.deltas(spark, 40).write.parquet(rawDir)
+      Fixtures.deltas(spark, 40 * n).write.parquet(rawDir)
       val stream = spark.readStream
         .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
-      Ingest.startStateMerge(stream, stateDir, ckpt,
-        keys = Seq("code", "table", "scope", "primary_key"), nBuckets = nBuckets)
-        .awaitTermination(60000)
+      Ingest.startStateMerge(stream, stateDir, ckpt, keys).awaitTermination(60000)
     }
-    run(1, 4)
-    val e = intercept[IllegalArgumentException](run(2, 8))
-    assert(e.getMessage.contains("nBuckets=4"))
+    seedBuckets(stateDir, 4)
+    run(1)
+    run(2)
+    val marker = java.nio.file.Paths.get(stateDir + "__meta", "nbuckets")
+    assert(java.nio.file.Files.readString(marker).trim === "4")
+    assert(new ParquetStateSink(stateDir, keys).buckets === 4)
+    val state = spark.read.parquet(stateDir)
+    assert(state.select("__kb").distinct().count() > 1L)
+    assert(state.filter(col("__kb") =!=
+      pmod(xxhash64(keys.map(col): _*), lit(4)).cast("int")).count() === 0L,
+      "every row sits in its 4-way bucket")
+    val expected = graft.state.StateMerge.fromHistory(
+      Fixtures.deltas(spark, 40).toDF().unionByName(Fixtures.deltas(spark, 80).toDF()), keys)
+    assert(state.drop("__kb").select(expected.columns.map(col).toIndexedSeq: _*)
+      .exceptAll(expected).count() === 0)
+    assert(state.count() === expected.count())
+  }
+
+  test("a __kb layout without a bucket marker fails loudly") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_state_nomarker").toString
+    val stateDir = s"$tmp/state"
+    val keys = Seq("code", "table", "scope", "primary_key")
+    Fixtures.deltas(spark, 10).toDF()
+      .withColumn("__kb", pmod(xxhash64(keys.map(col): _*), lit(4)).cast("int"))
+      .write.partitionBy("__kb").parquet(stateDir)
+    val rawDir = s"$tmp/deltas"
+    Fixtures.deltas(spark, 10).write.parquet(rawDir)
+    val stream = spark.readStream
+      .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
+    val e = intercept[IllegalArgumentException] {
+      Ingest.startStateMerge(stream, stateDir, s"$tmp/ckpt", keys)
+    }
+    assert(e.getMessage.contains("no bucket marker"), e.getMessage)
+    val direct = intercept[IllegalArgumentException] {
+      new ParquetStateSink(stateDir, keys).mergeBatch(Fixtures.deltas(spark, 10).toDF())
+    }
+    assert(direct.getMessage.contains("no bucket marker"), direct.getMessage)
   }
 
   test("a torn (empty) bucket marker fails the start with a message naming the marker") {
@@ -266,7 +300,7 @@ class IngestSpec extends SparkSpec {
       .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
     val e = intercept[IllegalArgumentException] {
       Ingest.startStateMerge(stream, stateDir, s"$tmp/ckpt",
-        keys = Seq("code", "table", "scope", "primary_key"), nBuckets = 4)
+        keys = Seq("code", "table", "scope", "primary_key"))
     }
     assert(e.getMessage.contains("__meta/nbuckets") && e.getMessage.contains("unreadable"),
       e.getMessage)
@@ -284,7 +318,7 @@ class IngestSpec extends SparkSpec {
     val stream = spark.readStream
       .schema(spark.read.parquet(rawDir).schema).parquet(rawDir)
     val q = Ingest.startStateMerge(stream, stateDir, ckpt,
-      keys = Seq("code", "table", "scope", "primary_key"), nBuckets = 4)
+      keys = Seq("code", "table", "scope", "primary_key"))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.awaitTermination(60000)
     }
