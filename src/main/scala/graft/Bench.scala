@@ -1,13 +1,123 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{GraftShim, SparkSession}
 
 /** Benchmark main — runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":…,"queries":{…}}. A warm-up action runs
   * first so per-query timings measure steady-state execution, not JVM /
-  * codegen warm-up.
+  * codegen warm-up. The full-timings sidecar (SPARK_GRAFT_BENCH_FULL)
+  * also carries, per query and pass, the wall and the [[Bench.Counts]]
+  * the query ran.
   */
 object Bench {
+
+  /** Spark work counted by [[Collector]]. Spill is memory plus disk
+    * bytes spilled, as pipebench's `spark.spill_bytes` counts it.
+    */
+  final case class Counts(jobs: Long = 0L, stages: Long = 0L, tasks: Long = 0L,
+      shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L,
+      spillBytes: Long = 0L, gcMs: Long = 0L) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, shuffleReadBytes - o.shuffleReadBytes,
+      shuffleWriteBytes - o.shuffleWriteBytes, spillBytes - o.spillBytes,
+      gcMs - o.gcMs)
+    def json: String =
+      s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,"shuffle_read_bytes":$shuffleReadBytes,""" +
+        s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,"gc_ms":$gcMs"""
+  }
+
+  /** One running total of the jobs, stages, tasks, shuffle, spill and GC
+    * of everything `sc` runs. The sweep runs one query at a time, so the
+    * difference of the [[snapshot]]s taken around a query is that query's
+    * work — streaming micro-batches included, which run under their own
+    * job group — with no stage→query map.
+    */
+  final class Collector(sc: SparkContext) extends SparkListener {
+    private var total = Counts()
+    sc.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized { total = total.copy(jobs = total.jobs + 1) }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { total = total.copy(stages = total.stages + 1) }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(e.taskMetrics).foreach { m =>
+        synchronized {
+          total = total.copy(tasks = total.tasks + 1,
+            shuffleReadBytes = total.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+            shuffleWriteBytes = total.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+            spillBytes = total.spillBytes + m.memoryBytesSpilled + m.diskBytesSpilled,
+            gcMs = total.gcMs + m.jvmGCTime)
+        }
+      }
+
+    /** The totals once every event posted so far has been delivered: the
+      * bus is asynchronous, and without the drain a query's last task and
+      * stage events would land in the next query's difference.
+      */
+    def snapshot(): Counts = {
+      try GraftShim.drainListenerBus(sc) catch {
+        case e: java.util.concurrent.TimeoutException =>
+          Console.err.println(s"[bench] listener bus not drained, counters may lag: $e")
+      }
+      synchronized(total)
+    }
+  }
+
+  /** One query's wall and work in one pass of the sweep. */
+  final case class Run(name: String, wallSec: Double, counts: Counts)
+
+  private def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+
+  // Escape control chars too (r17 ADVICE): AnalysisException messages
+  // embed newlines/tabs (plan fragments); one unescaped \n would render
+  // the sidecar invalid JSON and defeat the machine-detectable goal.
+  private def jstr(v: String): String = {
+    val sb = new StringBuilder
+    v.foreach {
+      case '\\' => sb.append("\\\\")
+      case '"' => sb.append("\\\"")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.toString
+  }
+
+  /** The full-timings sidecar: the per-query minimum of the passes under
+    * `queries` (what the headline totals), the failures by query, and
+    * each pass's wall and counts under `per_query`.
+    */
+  private[graft] def sidecar(passes: Seq[Seq[Run]],
+      errors: collection.Map[String, String], contended: Boolean,
+      allocStalled: Boolean, sf: String): String = {
+    val results = minimumWalls(passes)
+    val all = results.map { case (k, v) => "\"" + jstr(k) + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) =>
+      "\"" + jstr(k) + "\":\"" + jstr(v) + "\""
+    }.mkString("{", ",", "}")
+    val perQuery = results.map { case (name, _) =>
+      passes.zipWithIndex.flatMap { case (p, i) =>
+        p.find(_.name == name).map(r =>
+          s""""pass${i + 1}":{"wall_sec":${fmt(r.wallSec)},${r.counts.json}}""")
+      }.mkString("\"" + jstr(name) + "\":{", ",", "}")
+    }.mkString("{", ",", "}")
+    s"""{"total":${fmt(results.map(_._2).sum)},"contended":$contended,"alloc_stalled":$allocStalled,"errors":$errJson,"queries":$all,"per_query":$perQuery,"sf":"${jstr(sf)}"}\n"""
+  }
+
+  /** Per query (in first-pass order), the minimum wall over the passes. */
+  private def minimumWalls(passes: Seq[Seq[Run]]): Seq[(String, Double)] = {
+    val later = passes.drop(1).map(_.map(r => r.name -> r.wallSec).toMap)
+    passes.head.map(r => r.name -> later.flatMap(_.get(r.name)).foldLeft(r.wallSec)(math.min))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -144,7 +254,8 @@ object Bench {
     // line per failure (query + exception class + message) and emit them
     // both to stderr immediately and into the full-timings sidecar.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def sweep(): Seq[(String, Double)] =
+    val collector = new Collector(spark.sparkContext)
+    def sweep(): Seq[Run] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .filter { case (name, _) =>
@@ -157,6 +268,7 @@ object Bench {
         // Off by default — the driver's recorded tails stay unchanged.
         if (sys.env.get("SPARK_GRAFT_TRACE").contains("1"))
           Console.err.println(s"[bench] start $name")
+        val before = collector.snapshot()
         val t0 = System.nanoTime()
         try force(fn(spark, sfDir)) catch {
           case e: Throwable =>
@@ -164,8 +276,9 @@ object Bench {
             errors(name) = line
             Console.err.println(s"[bench] $name FAILED: $line")
         }
+        val wall = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.setJobDescription(null)
-        name -> (System.nanoTime() - t0) / 1e9
+        Run(name, wall, collector.snapshot() - before)
       }
     val firstPass = sweep()
     // mid-sweep probe pair: the r16 driver artifact showed a 29% pass
@@ -179,9 +292,7 @@ object Bench {
     // passes and report the per-query minimum (steady state) plus both
     // pass totals so the artifact is readable either way.
     val secondPass = sweep()
-    val m2 = secondPass.toMap
-    val results =
-      firstPass.map { case (n, v) => n -> math.min(v, m2.getOrElse(n, v)) }
+    val results = minimumWalls(Seq(firstPass, secondPass))
     // The driver captures only a tail of stdout before parsing the JSON
     // line — per-query detail is limited to the headline queries so the
     // whole line stays well under that window (r1's all-78 line was cut
@@ -201,21 +312,18 @@ object Bench {
     // drop its per-query entry from the bench line
     val orphaned = headline.filterNot(SparkEntry.queries.keySet)
     require(orphaned.isEmpty, s"headline names not in SparkEntry.queries: $orphaned")
-    def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     val byName = results.toMap
     val qs = headline.flatMap(n => byName.get(n).map(v => "\"" + n + "\":" + fmt(v)))
       .mkString("{", ",", "}")
     val probeEnd = (1 to 3).map(_ => probe()).min
     val total = fmt(results.map(_._2).sum)
-    val all = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
     // An idle box probes ~0.08-0.10 s; stamp the verdict so a contended
     // artifact is machine-detectable instead of a judge-side inference
     // (r13's headline run recorded 233.8 s with no flag — the 214.3 s
     // uncontended perquery twin was the number to trust).
     val contended = math.max(probeStart, probeEnd) > 0.2
     val passesInfo =
-      s""","passes":2,"total_pass1":${fmt(firstPass.map(_._2).sum)},"total_pass2":${fmt(secondPass.map(_._2).sum)}"""
+      s""","passes":2,"total_pass1":${fmt(firstPass.map(_.wallSec).sum)},"total_pass2":${fmt(secondPass.map(_.wallSec).sum)}"""
     val bwEnd = (1 to 2).map(_ => bwProbe()).max
     val allocEnd = (1 to 2).map(_ => allocProbe()).min
     // Allocation-stall verdict, the contended twin: the r16 cross-boot
@@ -228,31 +336,12 @@ object Bench {
     // a judge-side inference.
     val allocStalled =
       Seq(allocStart, allocMid, allocEnd).max > 0.2
-    // Escape control chars too (r17 ADVICE): AnalysisException messages
-    // embed newlines/tabs (plan fragments); one unescaped \n would render
-    // the sidecar invalid JSON and defeat the machine-detectable goal.
-    def jstr(v: String): String = {
-      val sb = new StringBuilder
-      v.foreach {
-        case '\\' => sb.append("\\\\")
-        case '"' => sb.append("\\\"")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      sb.toString
-    }
-    val errJson = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + jstr(v) + "\""
-    }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total_${results.size}_queries","value":$total,"unit":"sec","queries":$qs,"probe_start_sec":${fmt(probeStart)},"probe_mid_sec":${fmt(probeMid)},"probe_end_sec":${fmt(probeEnd)},"bw_probe_start_gbs":${fmt(bwStart)},"bw_probe_end_gbs":${fmt(bwEnd)},"alloc_probe_start_sec":${fmt(allocStart)},"alloc_probe_mid_sec":${fmt(allocMid)},"alloc_probe_end_sec":${fmt(allocEnd)},"contended":$contended,"alloc_stalled":$allocStalled,"n_errors":${errors.size}$passesInfo,"sf":"$sfDir"}"""
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "/tmp/graft_bench_full.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
-        s"""{"total":$total,"contended":$contended,"alloc_stalled":$allocStalled,"errors":$errJson,"queries":$all,"sf":"$sfDir"}\n""".getBytes)
+        sidecar(Seq(firstPass, secondPass), errors, contended, allocStalled, sfDir).getBytes)
     } catch {
       case e: Throwable =>
         Console.err.println(s"[bench] could not write full timings to $fullPath: $e")

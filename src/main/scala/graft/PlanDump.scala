@@ -35,10 +35,17 @@ object PlanDump {
         // design), which truncates explain to the final sort — these
         // synthetic cases rebuild ONE round un-checkpointed so the
         // per-round exchange shape is visible
-        case "pagerank_round" | "pagerank_round_r16" =>
-          // ONE power-iteration, un-checkpointed, against the SAME cached
-          // edgesDeg build pageRank uses — shows whether the per-iteration
-          // edge⋈rank join re-exchanges the cached edge list.
+        case "pagerank_round" | "pagerank_round_r16" | "pagerank_round2" =>
+          // power iterations un-checkpointed, built by the operator's own
+          // step (Rank.pageRankStep) against the SAME cached edgesDeg build
+          // pageRank uses. "pagerank_round" shows whether the per-iteration
+          // edge⋈rank join re-exchanges the cached edge list;
+          // "pagerank_round_r16" rebuilds the round-16 unpartitioned cache;
+          // "pagerank_round2" runs TWO iterations with the first lazily
+          // checkpointed exactly as pageRank does — it shows what
+          // partitioning the iteration-N ranks carry INTO iteration N+1
+          // (the one-round case feeds the join from the cache itself,
+          // which hides whether the checkpoint preserves hash(node)).
           import org.apache.spark.sql.functions._
           import org.apache.spark.storage.StorageLevel
           val edges = operators.Rank.tradeGraph(
@@ -46,45 +53,19 @@ object PlanDump {
           val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
           val joined0 = edges.join(deg, "src")
           val edgesDeg =
-            (if (n == "pagerank_round_r16") joined0 // the round-16 unpartitioned cache
+            (if (n == "pagerank_round_r16") joined0
              else operators.Rank.partitionEdges(joined0, "src"))
               .persist(StorageLevel.MEMORY_AND_DISK)
           val nodes = edgesDeg.select(col("src").as("node")).distinct()
           nodes.count() // materialize the cache, as pageRank's node count does,
           // so the explain reflects the partitioning iterations actually see
           val ranks = nodes.select(col("node"), lit(100L).as("pr_e8"))
-          edgesDeg
-            .join(ranks.hint("shuffle_hash"), edgesDeg("src") === ranks("node"))
-            .select(col("dst"),
-              round(col("pr_e8") / col("deg")).cast("long").as("contrib_e8"))
-            .groupBy("dst")
-            .agg(sum(col("contrib_e8")).as("in_e8"))
-            .explain("formatted")
-        case "pagerank_round2" =>
-          // TWO power-iterations with the first lazily checkpointed
-          // exactly as pageRank does — shows what partitioning the
-          // iteration-N ranks actually carry INTO iteration N+1 (the
-          // one-round case above feeds the join from the cache itself,
-          // which hides whether the checkpoint preserves hash(node)).
-          import org.apache.spark.sql.functions._
-          import org.apache.spark.storage.StorageLevel
-          val edges = operators.Rank.tradeGraph(
-            Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir), 1000000L)
-          val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-          val edgesDeg = operators.Rank.partitionEdges(edges.join(deg, "src"), "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val nodes = edgesDeg.select(col("src").as("node")).distinct()
-          nodes.count()
-          var ranks = nodes.select(col("node"), lit(100L).as("pr_e8"))
-          def iter(r: org.apache.spark.sql.DataFrame) = edgesDeg
-            .join(r.hint("shuffle_hash"), edgesDeg("src") === r("node"))
-            .select(col("dst"),
-              round(col("pr_e8") / col("deg")).cast("long").as("contrib_e8"))
-            .groupBy("dst")
-            .agg(sum(col("contrib_e8")).as("in_e8"))
-            .select(col("dst").as("node"), col("in_e8").as("pr_e8"))
-          ranks = iter(ranks).localCheckpoint(eager = false)
-          iter(ranks).explain("formatted")
+          def step(r: org.apache.spark.sql.DataFrame) =
+            operators.Rank.pageRankStep(edgesDeg, r, baseE8 = 0.0, damping = 0.85)
+          val prior =
+            if (n == "pagerank_round2") step(ranks).localCheckpoint(eager = false)
+            else ranks
+          step(prior).explain("formatted")
         case "ppr_round" | "ppr_round_r16" =>
           // ONE forward-push round, un-checkpointed, so the per-round
           // exchange shape is visible. "ppr_round_r16" rebuilds the

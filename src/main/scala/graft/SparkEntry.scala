@@ -689,8 +689,8 @@ object SparkEntry {
     * filesystem tie could otherwise process the sentinel first,
     * advancing the watermark past every real event.
     */
-  /** Staging phase of [[qStreamCardinality]] (split out so BenchStreamCard
-    * can time the phases separately): one events pass stages both
+  /** Staging phase of [[qStreamCardinality]] (its phase timings are in
+    * OPTIMIZATION_r18.md §6): one events pass stages both
     * time-split chunks (was: two filtered scan+write jobs plus a max(ts)
     * scan); the sentinel timestamp rides the same pass as an Observation.
     * repartitionByRange(2, chunk): the harness needs file == chunk so
@@ -700,7 +700,7 @@ object SparkEntry {
     * old repartition(1) serialized the whole staged write through one
     * task). Returns the harness tmp dir.
     */
-  private[graft] def streamCardStage(s: SparkSession, d: String): String = {
+  private def streamCardStage(s: SparkSession, d: String): String = {
     import org.apache.hadoop.fs.Path
     val tmp = java.nio.file.Files.createTempDirectory("graft_shll").toString
     val in = s"$tmp/in"
@@ -739,7 +739,7 @@ object SparkEntry {
   /** Streaming phase of [[qStreamCardinality]]: the windowed-HLL stream
     * over the staged chunks, then the estimate readout over the sink.
     */
-  private[graft] def streamCardRun(s: SparkSession, tmp: String): DataFrame = {
+  private def streamCardRun(s: SparkSession, tmp: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val in = s"$tmp/in"; val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val schema = s.read.parquet(in).schema
@@ -1028,8 +1028,8 @@ object SparkEntry {
     * customer↔supplier trade graph. Integer 1e8-unit rank carrier —
     * only scale-0 rounds and integer sums, bit-identical across engines.
     * 6 registered iterations (the operator takes any count): per-
-    * iteration cost is edge-list-linear — the BenchIter decade artifact
-    * records the marginal cost, the registered demo stays suite-sane.
+    * iteration cost is edge-list-linear — PLANS.md records the marginal
+    * cost per iteration, the registered demo stays suite-sane.
     */
   private def qPageRank(s: SparkSession, d: String): DataFrame =
     Rank.pageRank(Rank.tradeGraph(T.orders(s, d), T.lineitem(s, d), 1000000L), 6)
@@ -1635,11 +1635,11 @@ object SparkEntry {
     * writes). Same rollup shape as [[qZipIngest]], so the oracle
     * replays from the base table.
     */
-  /** Archive-build phase of [[qSevenZIngest]] (split out so the ingest
-    * decomposition can time encode vs decode separately — the timed
-    * query remains encode + decode + rollup, unchanged).
+  /** Archive-build phase of [[qSevenZIngest]]: the encode that
+    * SCALING.md "Round 18 — the archive-ingest pair, attributed and
+    * closed" measures as ≥ 94% of the query's wall.
     */
-  private[graft] def sevenZArchives(s: SparkSession, d: String)
+  private def sevenZArchives(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.SevenZWalk
     import s.implicits._
@@ -1703,10 +1703,10 @@ object SparkEntry {
     * corruption is the detectable kind, and it quarantines the file
     * as one row. Closed-form rollup replays from the base table.
     */
-  /** Archive-build phase of [[qArrowIngest]] (split out for the ingest
-    * decomposition, same as [[sevenZArchives]]).
+  /** Archive-build phase of [[qArrowIngest]], the encode half, as
+    * [[sevenZArchives]] is for 7z.
     */
-  private[graft] def arrowFiles(s: SparkSession, d: String)
+  private def arrowFiles(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.ArrowWalk
     import s.implicits._
@@ -5527,10 +5527,10 @@ object SparkEntry {
     all.filter(col("block_num") < 320).write.parquet(raw)
     // scale-adaptive stream width: the live-tail ingest plans each
     // 100 ms micro-batch at the static width (no AQE inside streaming);
-    // the polling reads and the final replay/handoff evaluate OUTSIDE
+    // the row-count checks and the final replay/handoff evaluate OUTSIDE
     // this function's conf scope at the session default. Width is set
-    // for the whole polling window because the concurrent stream thread
-    // plans batches throughout it.
+    // for the whole run because the concurrent stream thread plans
+    // batches throughout it.
     val width = graft.streaming.StreamScale.partitionsFor(
       graft.streaming.StreamScale.dirBytes(s, raw))
     // withShuffleWidth (not a bare conf.set): if startActionIngest itself
@@ -5542,14 +5542,12 @@ object SparkEntry {
       val q = graft.streaming.Ingest.startActionIngest(
         s.readStream.schema(all.schema).parquet(raw), hist, ckpt,
         partitionSize = 100L, trigger = Trigger.ProcessingTime("100 milliseconds"))
-      def countHist(): Long =
-        try s.read.parquet(hist).count() catch { case _: Exception => -1L }
+      // processAllAvailable returns once a trigger finds no new file
+      // (and rethrows the stream's failure), so one count is exact
       def awaitCount(expect: Long): Unit = {
-        val deadline = System.currentTimeMillis() + 120000
-        while (countHist() != expect && System.currentTimeMillis() < deadline)
-          Thread.sleep(100)
-        require(countHist() == expect,
-          s"handoff ingest stalled: ${countHist()} of $expect rows")
+        q.processAllAvailable()
+        val got = s.read.parquet(hist).count()
+        require(got == expect, s"handoff ingest stalled: $got of $expect rows")
       }
       try {
         // 100 merged transfers + 20 custom trx (blocks 300-319) x 4 actions

@@ -3,10 +3,11 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ↔ Expression bridge for the graft engine's native expressions.
-  * Spark 4 made these converters `private[sql]`; extension libraries
-  * bridge them from inside the package (the conventional pattern for
-  * Catalyst-extension projects).
+/** Column ↔ Expression bridge for the graft engine's native expressions,
+  * and the listener-bus drain for its counters. Spark 4 made these
+  * `private[sql]`/`private[spark]`; extension libraries bridge them from
+  * inside the package (the conventional pattern for Catalyst-extension
+  * projects).
   */
 object GraftShim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -21,4 +22,11 @@ object GraftShim {
     */
   def eagerExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** Block until every event posted to `sc`'s listener bus so far has
+    * reached its listeners (Spark delivers them asynchronously). Throws
+    * `TimeoutException` when the bus does not empty within 10 s.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

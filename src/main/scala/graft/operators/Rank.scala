@@ -230,20 +230,7 @@ object Rank {
   def pageRank(
       edges: DataFrame, // columns: src, dst (already symmetric)
       iterations: Int,
-      damping: Double = 0.85): DataFrame =
-    pageRankImpl(edges, iterations, damping, useShj = true)
-
-  /** [[pageRank]] with the per-iteration join strategy exposed for the
-    * BenchIter A/B: the shuffle-hash hint predates the sorted
-    * partitioned edge cache (r17) — with the cache sorted by src, SMJ
-    * no longer re-sorts the edge side, so the hint's rationale needs
-    * re-measuring (HITS measured the hint WORSE post-cache).
-    */
-  private[graft] def pageRankImpl(
-      edges: DataFrame,
-      iterations: Int,
-      damping: Double,
-      useShj: Boolean): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // partitioned-by-src cache: the 6 per-iteration joins read it
     // exchange-free (see partitionEdges)
@@ -257,27 +244,12 @@ object Rank {
       col("node"),
       round(lit(1.0e8 / nNodes)).cast("long").as("pr_e8"))
     for (_ <- 1 to iterations) {
-      // shuffle-hash hint on the rank side: an SMJ here re-SORTS the
-      // edge list every iteration (ReuseExchange dedupes the exchange,
-      // not the sort above it — measured the dominant cost at 100×);
-      // SHJ builds a per-partition map of the node-sized rank state
-      // instead, which is exactly the side that fits
-      val rside = if (useShj) ranks.hint("shuffle_hash") else ranks
-      ranks = edgesDeg
-        .join(rside, edgesDeg("src") === rside("node"))
-        .select(
-          col("dst"),
-          round(col("pr_e8") / col("deg")).cast("long").as("contrib_e8"))
-        .groupBy("dst")
-        .agg(sum(col("contrib_e8")).as("in_e8"))
-        .select(
-          col("dst").as("node"),
-          round(lit(baseE8) + lit(damping) * col("in_e8")).cast("long").as("pr_e8"))
-        // lazy per-iteration truncation (the HITS lesson): without it
-        // iteration i's plan embeds all i−1 priors, so a convergence-
-        // length run (30–50 iterations) pays quadratic analysis cost;
-        // the aggregate above ends in a shuffle, so the checkpoint
-        // adds zero jobs and downstream reads reuse the shuffle files
+      // lazy per-iteration truncation (the HITS lesson): without it
+      // iteration i's plan embeds all i−1 priors, so a convergence-
+      // length run (30–50 iterations) pays quadratic analysis cost;
+      // the step ends in a shuffle aggregate, so the checkpoint adds
+      // zero jobs and downstream reads reuse the shuffle files
+      ranks = pageRankStep(edgesDeg, ranks, baseE8, damping)
         .localCheckpoint(eager = false)
     }
     // eager node-sized snapshot truncates the lineage, so the edge-scale
@@ -286,6 +258,36 @@ object Rank {
     edgesDeg.unpersist()
     nodes.unpersist()
     out
+  }
+
+  /** One power iteration of [[pageRank]]: `edgesDeg` (src, dst, deg)
+    * joins the rank state (node, pr_e8), each edge carries
+    * `pr_e8 / deg`, contributions sum per dst, and the damping/base
+    * projection gives the next (node, pr_e8). PlanDump explains this
+    * same builder, so its per-round plans are the operator's.
+    *
+    * Shuffle-hash hint on the rank side: an SMJ here re-sorts the
+    * node-sized rank state every iteration; SHJ builds a per-partition
+    * map of it instead, which is exactly the side that fits. Re-measured
+    * after the sorted edge cache landed: SHJ won every ×10 pair
+    * (OPTIMIZATION_r18.md §5).
+    */
+  private[graft] def pageRankStep(
+      edgesDeg: DataFrame,
+      ranks: DataFrame,
+      baseE8: Double,
+      damping: Double): DataFrame = {
+    val rside = ranks.hint("shuffle_hash")
+    edgesDeg
+      .join(rside, edgesDeg("src") === rside("node"))
+      .select(
+        col("dst"),
+        round(col("pr_e8") / col("deg")).cast("long").as("contrib_e8"))
+      .groupBy("dst")
+      .agg(sum(col("contrib_e8")).as("in_e8"))
+      .select(
+        col("dst").as("node"),
+        round(lit(baseE8) + lit(damping) * col("in_e8")).cast("long").as("pr_e8"))
   }
 
   /** Personalized PageRank: teleport mass returns to a SOURCE SET

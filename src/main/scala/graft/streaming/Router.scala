@@ -58,8 +58,9 @@ object Router {
   /** Topic-map routing for large subscription sets: events join a
     * broadcast subscription table on (contract, action) with wildcard
     * buckets unioned in — mirrors `contractActionRelayMap` + `*` buckets
-    * (ws-router.ts:38-48). Meta filters still apply per subscription via
-    * `route` within the matched topic.
+    * (ws-router.ts:38-48). It routes on contract/action only: neither a
+    * subscription's `account` match nor its meta `filters` is applied,
+    * so it equals [[route]] only for subscriptions that have neither.
     */
   def routeByTopic(events: DataFrame, subTable: DataFrame): DataFrame = {
     val exact = events.join(

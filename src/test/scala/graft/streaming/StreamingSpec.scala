@@ -326,6 +326,73 @@ class IngestSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("__kb")))
   }
 
+  test("multi-segment ingest: compaction, below-LIB fork rewrite and expiry keep exactly the live actions") {
+    import graft.sources.Layout
+    import graft.state.Forks
+    val tmp = java.nio.file.Files.createTempDirectory("graft_segments").toString
+    val outDir = s"$tmp/history"
+    val partitionSize = 10L
+    val perSeg = 12L
+    // one transfer per block (3 receipt rows merge to one action), 100..135
+    val all = Fixtures.rawTraces(spark, 36, 0, 0).toDF()
+    def blockId(n: Long) = f"00${n}%014x"
+    val events = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Boolean)]()
+    var applied = Set.empty[Long] // forked blocks physically rewritten away
+    var standing = Set.empty[Long] // retracted and never re-adopted
+    def unapplied = Forks.effectiveTombstones(
+        events.toSeq.toDF("block_num", "block_id", "seq", "retracted")
+          .select($"block_id", $"seq", $"retracted"))
+      .join(events.toSeq.map(e => (e._1, e._2)).toDF("block_num", "block_id").distinct(),
+        Seq("block_id"))
+      .join(applied.toSeq.toDF("block_num"), Seq("block_num"), "left_anti")
+    var expireWatermark = 0L
+    for (seg <- 0 until 3) {
+      val first = 100L + seg * perSeg
+      val src = s"$tmp/src$seg"
+      all.filter($"block_num" >= first && $"block_num" < first + perSeg)
+        .repartition(3, $"block_num").write.parquet(src)
+      val q = Ingest.startActionIngest(
+        spark.readStream.schema(all.schema).option("maxFilesPerTrigger", "1").parquet(src),
+        outDir, s"$tmp/ckpt$seg", partitionSize = partitionSize)
+      assert(q.awaitTermination(120000), s"segment $seg did not finish")
+      // forks near the tip: four retracted, the even two re-adopted
+      val tip = first + perSeg - 1
+      val lib = tip - 8
+      val forked = (tip - 5) to (tip - 2)
+      forked.foreach(b => events += ((b, blockId(b), events.size + 1L, true)))
+      forked.filter(_ % 2 == 0).foreach(b => events += ((b, blockId(b), events.size + 1L, false)))
+      standing ++= forked.filter(_ % 2 != 0)
+      if (seg >= 1) {
+        assert(Layout.compact(outDir, targetFileBytes = 64L << 20,
+          partitionCol = "block_bucket") > 0, s"segment $seg left nothing to compact")
+        val toApply = unapplied.filter($"block_num" <= lib)
+          .select($"block_num", $"block_id").as[(Long, String)].collect()
+        assert(toApply.nonEmpty)
+        Layout.rewriteFiltered(outDir, toApply.map(_._1 / partitionSize).toSeq,
+          !col("block_id").isin(toApply.map(_._2).toSeq: _*))
+        applied ++= toApply.map(_._1)
+        // every below-LIB tombstone was just applied, so pruning below LIB
+        // cannot hide an unapplied one
+        assert(Forks.pruneBelowLib(unapplied, lib).count() === unapplied.count())
+      }
+      if (seg == 2) {
+        expireWatermark = 110L
+        assert(Layout.expire(outDir, expireWatermark, partitionSize,
+          partitionCol = "block_bucket") === 1)
+      }
+    }
+    val history = spark.read.parquet(outDir)
+    val firstKept = expireWatermark / partitionSize * partitionSize
+    val lastBlock = 100L + 3 * perSeg - 1
+    val expected = lastBlock - firstKept + 1 - applied.count(_ >= firstKept)
+    assert(history.count() === expected)
+    assert(history.select($"global_sequence").distinct().count() === expected)
+    assert(history.agg(min($"block_num")).as[Long].head() === firstKept)
+    // applied forks are gone, unapplied ones tombstone-hidden, re-adopted visible
+    val live = Forks.liveView(history, unapplied.select($"block_id"))
+    assert(live.count() === lastBlock - firstKept + 1 - standing.count(_ >= firstKept))
+  }
+
   test("live tail: ProcessingTime trigger follows arriving files; fork seam retracts (ST5/ST7 seam)") {
     import org.apache.spark.sql.streaming.Trigger
     val tmp = java.nio.file.Files.createTempDirectory("graft_live").toString
