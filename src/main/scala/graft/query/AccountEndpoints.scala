@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Account/transaction/block endpoint family (J2/J4, get_transaction,
@@ -44,12 +44,27 @@ object AccountEndpoints {
     * `partitionSize` bucket; it prunes parquet row groups by their
     * `block_num` statistics, not partitions (the scan's
     * `PartitionFilters` stay empty).
+    *
+    * Plan: one transaction's actions are a handful of rows, so they are
+    * gathered into one partition and sorted there — a scan stage and a
+    * one-task sort, no range-partitioning sample job.
     */
   def getTransaction(
       actions: DataFrame,
       trxId: String,
       lib: Long,
       blockHint: Option[Long] = None,
+      partitionSize: Long = 1000000L): DataFrame =
+    sortedInOnePartition(
+      transactionActions(actions, trxId, lib, blockHint, partitionSize),
+      col("global_sequence"))
+
+  /** The unsorted rows of [[getTransaction]]. */
+  private def transactionActions(
+      actions: DataFrame,
+      trxId: String,
+      lib: Long,
+      blockHint: Option[Long],
       partitionSize: Long = 1000000L): DataFrame = {
     val normalized = lower(lit(trxId))
     val base = blockHint match {
@@ -63,8 +78,11 @@ object AccountEndpoints {
     base.filter(lower(col("trx_id")) === normalized)
       .withColumn("last_irreversible_block", lit(lib))
       .withColumn("irreversible", col("block_num") <= col("last_irreversible_block"))
-      .orderBy(col("global_sequence"))
   }
+
+  /** A global sort of a frame known to be small (one transaction's rows). */
+  private def sortedInOnePartition(df: DataFrame, key: Column): DataFrame =
+    df.repartition(1).sortWithinPartitions(key)
 
   /** POST /v1/history/get_transaction — the eosio-v1 reshape of
     * [[getTransaction]] (reference `v1-history/get_transaction/
@@ -78,8 +96,9 @@ object AccountEndpoints {
     * row — the reference's parallel `get_info`.
     *
     * Plan: inherits [[getTransaction]]'s block-hint row-group range
-    * predicate; the explode is narrow (one trx's receipts), so the whole
-    * route stays one scan with the LIB as a literal column.
+    * predicate; the explode is narrow (one trx's receipts), and the
+    * traces are sorted in one partition like [[getTransaction]]'s rows,
+    * so the whole route is one scan stage and a one-task sort.
     */
   def getTransactionV1(
       actions: DataFrame,
@@ -87,8 +106,7 @@ object AccountEndpoints {
       lib: Long,
       blockHint: Option[Long] = None,
       partitionSize: Long = 1000000L): DataFrame = {
-    val hits = getTransaction(actions, trxId, lib, blockHint, partitionSize)
-    hits
+    val traces = transactionActions(actions, trxId, lib, blockHint, partitionSize)
       .select(col("trx_id"), col("block_num"),
         col("timestamp").as("block_time"), col("act"),
         col("act_digest"), col("last_irreversible_block"),
@@ -112,7 +130,7 @@ object AccountEndpoints {
         array().cast("array<string>").as("inline_traces"),
         lit("").as("producer_block_id"),
         col("last_irreversible_block"))
-      .orderBy(col("receipt.global_sequence"))
+    sortedInOnePartition(traces, col("receipt.global_sequence"))
   }
 
   /** POST /v1/trace/get_block — per-block transaction-trace reshaping
@@ -187,8 +205,7 @@ object AccountEndpoints {
       trxId: String,
       lib: Long,
       blockHint: Option[Long] = None): DataFrame = {
-    val hits = getTransaction(actions, trxId, lib, blockHint)
-    hits
+    transactionActions(actions, trxId, lib, blockHint)
       .agg(
         count(lit(1)).as("__n"),
         min(col("block_num")).as("__block"),

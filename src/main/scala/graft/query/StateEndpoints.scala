@@ -120,33 +120,38 @@ object StateEndpoints {
     * number exceeds 1; the miss is attributed to the producer of the
     * following block's round (simplified single-pass model of the
     * reference's client-side aggregation).
+    *
+    * Plan: the gaps inside each block-number bucket come from a lag on a
+    * distributed window (one partition per bucket); the gaps across bucket
+    * seams come from a per-bucket (first block, its producer, last block)
+    * summary lagged over the non-empty buckets — one row per bucket, the
+    * only single-partition exchange. The per-producer result is a handful
+    * of rows, sorted in one partition rather than range-partitioned.
     */
   def getMissedBlocks(blocks: DataFrame, blockBucket: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Bucketed lag: rows lag inside block-number buckets (distributed
-    // window); each bucket's first row takes its predecessor from a tiny
-    // per-bucket-max table (one row per bucket, broadcast back), so no
-    // single-reducer sort over the full blocks table at scale.
     val b = blocks
       .select(col("block_num"), col("producer"))
       .withColumn("__b", floor(col("block_num") / blockBucket))
     val wIn = Window.partitionBy(col("__b")).orderBy(col("block_num"))
+    val inBucket = b
+      .select(col("producer"),
+        (col("block_num") - lag(col("block_num"), 1).over(wIn) - 1).as("missed"))
     // constant partition key: one row per bucket — single-partition by
     // design (the foldable key is pruned by EliminateWindowPartitions,
     // so the WindowExec WARN still fires; see PLANS.md)
     val wBuckets = Window.partitionBy(lit(1)).orderBy(col("__b"))
-    val prevBucketMax = b.groupBy(col("__b"))
-      .agg(max(col("block_num")).as("__bmax"))
-      .withColumn("__prev_bmax", lag(col("__bmax"), 1).over(wBuckets))
-      .select(col("__b"), col("__prev_bmax"))
-    b.join(broadcast(prevBucketMax), "__b")
-      .withColumn("__prev",
-        coalesce(lag(col("block_num"), 1).over(wIn), col("__prev_bmax")))
-      .withColumn("missed", (col("block_num") - col("__prev") - 1))
+    val seams = b.groupBy(col("__b"))
+      .agg(min(struct(col("block_num"), col("producer"))).as("__first"),
+        max(col("block_num")).as("__bmax"))
+      .select(col("__first.producer").as("producer"),
+        (col("__first.block_num") - lag(col("__bmax"), 1).over(wBuckets) - 1).as("missed"))
+    inBucket.unionByName(seams)
       .filter(col("missed") > 0)
       .groupBy(col("producer"))
       .agg(sum(col("missed")).as("missed_blocks"), count(lit(1)).as("gaps"))
-      .orderBy(col("producer"))
+      .coalesce(1)
+      .sortWithinPartitions(col("producer"))
   }
 
   /** get_key_accounts with either key form (C11,

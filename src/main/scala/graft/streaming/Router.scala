@@ -92,11 +92,14 @@ object Replay {
     * page/ack on (the reference's scroll batches of 500).
     *
     * The global ordinal is derived without a global window: rows rank
-    * inside block-number buckets (distributed window, one partition per
-    * bucket), and each bucket's starting offset comes from a tiny
-    * cumulative-count table (one row per bucket, broadcast back). An
-    * unbounded re-sync therefore never funnels history through a single
-    * reducer — the only serial structure is over ~n/blockBucket rows.
+    * inside block-number buckets placed relative to `startBlock`
+    * (distributed window, one partition per bucket). A range of at most
+    * `blockBucket` blocks is therefore one bucket, whose rank is the
+    * ordinal: scan, then one hash exchange into the window. A longer
+    * range adds each bucket's starting offset from a tiny cumulative-count
+    * table (one row per bucket, broadcast back), so an unbounded re-sync
+    * never funnels history through a single reducer — the only serial
+    * structure is over ~n/blockBucket rows.
     */
   def replay(
       history: DataFrame,
@@ -107,21 +110,27 @@ object Replay {
     import org.apache.spark.sql.expressions.Window
     val slice = history
       .filter(col("block_num").between(startBlock, endBlock))
-      .withColumn("__b", floor(col("block_num") / blockBucket))
-    // constant partition key: bucket-summary frame (~blocks/blockBucket
-    // rows) — single-partition by design (Spark 4's
-    // EliminateWindowPartitions prunes the foldable key, so the
-    // WindowExec WARN still fires; attribution: PLANS.md)
-    val wBuckets = Window.partitionBy(lit(1)).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = slice.groupBy(col("__b"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(wBuckets), lit(0L)))
-      .select(col("__b"), col("__off"))
+      .withColumn("__b", floor((col("block_num") - startBlock) / blockBucket))
     val wInBucket = Window.partitionBy(col("__b"))
       .orderBy(col("block_num"), col("global_sequence"))
-    slice.join(broadcast(offsets), "__b")
-      .withColumn("__ord", col("__off") + row_number().over(wInBucket))
+    val rank = row_number().over(wInBucket)
+    val ordinal =
+      if (BigInt(endBlock) - startBlock < blockBucket) slice.withColumn("__ord", rank)
+      else {
+        // constant partition key: bucket-summary frame (~blocks/blockBucket
+        // rows) — single-partition by design (Spark 4's
+        // EliminateWindowPartitions prunes the foldable key, so the
+        // WindowExec WARN still fires; attribution: PLANS.md)
+        val wBuckets = Window.partitionBy(lit(1)).orderBy(col("__b"))
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val offsets = slice.groupBy(col("__b"))
+          .agg(count(lit(1)).as("__cnt"))
+          .withColumn("__off", coalesce(sum(col("__cnt")).over(wBuckets), lit(0L)))
+          .select(col("__b"), col("__off"))
+        slice.join(broadcast(offsets), "__b")
+          .withColumn("__ord", col("__off") + rank)
+      }
+    ordinal
       .withColumn("batch_seq", floor((col("__ord") - 1) / batchSize))
       .drop("__b", "__off", "__ord")
   }

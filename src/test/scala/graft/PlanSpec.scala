@@ -72,35 +72,48 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("bucketed windows: single-partition exchange only on bucket summaries") {
-    // missed-blocks, replay ordinals and gap detection each keep the full
-    // table on a distributed hashpartitioning(__b) window; the only
-    // Exchange SinglePartition allowed is the metadata-sized
-    // bucket-boundary/offset frame (one row per bucket). A second one, or
-    // the full table feeding it, is the single-reducer sort these plans
-    // were rewritten to avoid.
+  test("bucketed windows: stage budgets of replay, missed blocks and gap detection") {
+    // Each full-table window runs on a distributed hashpartitioning(__b);
+    // the only Exchange SinglePartition allowed is a metadata-sized bucket
+    // summary (one row per bucket), and only where it is needed: a replay
+    // range of at most blockBucket blocks is one bucket with no offsets
+    // (scan + one hash exchange), a longer range adds the offsets frame,
+    // and missed blocks lags one bucket summary. Each extra exchange is a
+    // Spark stage on every request.
+    def singlePartitionExchanges(p: String): Int =
+      "Exchange SinglePartition".r.findAllIn(p).length
+    def executed(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
     val blocks = graft.etl.Fixtures.blocks(spark, 200).toDF()
-    val hist = graft.etl.ActionDedup.mergeReceipts(
-      graft.etl.Fixtures.rawTraces(spark, 100, 0, 0))(spark)
+    // a local copy, so the receipts merge's own shuffle stays out of the plans
+    val merged = graft.etl.ActionDedup.mergeReceipts(
+      graft.etl.Fixtures.rawTraces(spark, 100, 0, 0))(spark).toDF()
+    val hist = spark.createDataFrame(merged.collectAsList(), merged.schema)
+
+    val oneBucket = executed(graft.streaming.Replay.replay(hist, 100L, 180L))
+    assert(singlePartitionExchanges(oneBucket) === 0, oneBucket)
+    assert(hashExchanges(oneBucket) === 1, oneBucket)
+    assert(oneBucket.contains("hashpartitioning(__b"), oneBucket)
+
+    val manyBuckets = executed(
+      graft.streaming.Replay.replay(hist, 100L, 180L, blockBucket = 16L))
+    assert(singlePartitionExchanges(manyBuckets) === 1,
+      s"replay over buckets: expected only the offsets exchange in:\n$manyBuckets")
+    assert(manyBuckets.contains("hashpartitioning(__b"), manyBuckets)
+
+    val missed = executed(graft.query.StateEndpoints.getMissedBlocks(blocks))
+    assert(singlePartitionExchanges(missed) === 1,
+      s"missed blocks: expected only the bucket-summary exchange in:\n$missed")
+    assert(missed.contains("hashpartitioning(__b"), missed)
+    assert(!missed.contains("Exchange rangepartitioning"), missed)
+
     // (gap_detect's bucket floor() is extracted by Catalyst as an
     // anonymous _groupingexpression, so its marker is the distributed
     // aggregate exchange rather than the __b name)
-    val plans = Seq(
-      ("missed_blocks", "hashpartitioning(__b",
-        graft.query.StateEndpoints.getMissedBlocks(blocks)
-          .queryExecution.executedPlan.toString),
-      ("replay", "hashpartitioning(__b",
-        graft.streaming.Replay.replay(hist, 100L, 180L)
-          .queryExecution.executedPlan.toString),
-      ("gap_detect", "Exchange hashpartitioning",
-        graft.operators.Gaps.detectBucketed(Tables.events(spark, sf), "event_id")
-          .queryExecution.executedPlan.toString))
-    plans.foreach { case (name, marker, p) =>
-      assert("Exchange SinglePartition".r.findAllIn(p).length === 1,
-        s"$name: expected exactly one single-partition exchange (bucket summaries)")
-      assert(p.contains(marker),
-        s"$name: full-table work must stay on a distributed bucket partitioning")
-    }
+    val gaps = executed(
+      graft.operators.Gaps.detectBucketed(Tables.events(spark, sf), "event_id"))
+    assert(singlePartitionExchanges(gaps) === 1, gaps)
+    assert(gaps.contains("Exchange hashpartitioning"), gaps)
   }
 
   test("LSH dedup joins: no pair-level shuffle after the bucket self-join") {
@@ -259,5 +272,11 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), p)
     assert(t.columns.takeRight(2).toSeq === Seq("last_irreversible_block", "irreversible"))
     assert(t.head().getAs[Long]("last_irreversible_block") === 150L)
+    // one transaction's rows sort in one partition: no range-partitioning
+    // sample job ahead of the sort
+    assert(!p.contains("Exchange rangepartitioning"), p)
+    val v1 = graft.query.AccountEndpoints.getTransactionV1(spark.read.parquet(dir),
+      "trx00000003", lib = 150L).queryExecution.executedPlan.toString
+    assert(!v1.contains("Exchange rangepartitioning"), v1)
   }
 }

@@ -37,6 +37,31 @@ class AccountEndpointsSpec extends SparkSpec {
     assert(t3.count() === 0)
   }
 
+  test("get_transaction: a multi-action trx split over files comes back in global_sequence order") {
+    // one trx of 6 inline actions, written as two parquet files that each
+    // hold their rows in descending global_sequence, the later half first:
+    // an answer read back in scan order would not be ascending
+    val dir = java.nio.file.Files.createTempDirectory("graft_trx_order").toString
+    try {
+      val trx = ActionDedup.mergeReceipts(Fixtures.rawTraces(spark, 0, 4, 5)).toDF()
+        .filter($"trx_id" === "ctrx00000002")
+      val gs = trx.select($"global_sequence").as[Long].collect().toSeq.sorted
+      assert(gs.length === 6)
+      Seq(gs.drop(3), gs.take(3)).foreach { part =>
+        trx.filter($"global_sequence".isin(part: _*)).orderBy($"global_sequence".desc)
+          .coalesce(1).write.mode("append").parquet(dir)
+      }
+      val stored = spark.read.parquet(dir)
+      assert(stored.inputFiles.length >= 2)
+      val scanOrder = stored.select($"global_sequence").as[Long].collect().toSeq
+      assert(scanOrder !== gs)
+      val v2 = AccountEndpoints.getTransaction(stored, "ctrx00000002", lib = 0L)
+      assert(v2.select($"global_sequence").as[Long].collect().toSeq === gs)
+      val v1 = AccountEndpoints.getTransactionV1(stored, "ctrx00000002", lib = 0L)
+      assert(v1.select($"receipt.global_sequence").as[Long].collect().toSeq === gs)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("get_blocks: producer + range filters, desc order (F2/F5)") {
     val blocks = Fixtures.blocks(spark, 200).toDF()
       .withColumnRenamed("timestamp", "timestamp") // schema has timestamp col

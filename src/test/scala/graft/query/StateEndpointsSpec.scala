@@ -87,6 +87,20 @@ class StateEndpointsSpec extends SparkSpec {
     assert(fine.exceptAll(coarse).count() === 0 && coarse.exceptAll(fine).count() === 0)
   }
 
+  test("get_missed_blocks: the seam lag skips a whole empty bucket") {
+    // blocks 180..260 dropped: with blockBucket = 16 the buckets of
+    // 192..255 hold no block, so the seam gap 179 → 261 must be taken
+    // from the last non-empty bucket before it (176..191)
+    val blocks = Fixtures.blocks(spark, 200).toDF()
+      .filter(!$"block_num".between(180L, 260L))
+    val fine = StateEndpoints.getMissedBlocks(blocks, blockBucket = 16L)
+    val coarse = StateEndpoints.getMissedBlocks(blocks)
+    assert(fine.collect().toSeq === coarse.collect().toSeq)
+    // the drop swallows the planted holes at 199 and 249; what is left is
+    // the hole at 149 (1 slot) and the dropped run 180..260 (81 slots)
+    assert(coarse.agg(sum($"missed_blocks")).as[Long].head() === 1 + 81)
+  }
+
   test("get_trx_count: totals, producer buckets, histogram (A1-A4/A8/A9)") {
     val blocks = Fixtures.blocks(spark, 200).toDF()
     val totals = StateEndpoints.getTrxCount(blocks).head()

@@ -67,6 +67,23 @@ class ReplaySpec extends SparkSpec {
     assert(fine.exceptAll(coarse).count() === 0 && coarse.exceptAll(fine).count() === 0)
   }
 
+  test("replay: a short range straddling a bucket multiple is still one bucket") {
+    // buckets sit relative to startBlock: 140..170 crosses block 150 (a
+    // multiple of blockBucket = 50) yet spans 31 blocks, so it takes the
+    // one-bucket path; its ordinals must equal the single-bucket and the
+    // offsets path's (one action per fixture block, global_sequence
+    // ascending with block_num, so the n-th action sits in page n / 4)
+    def seqs(blockBucket: Long) =
+      Replay.replay(history.toDF(), 140L, 170L, batchSize = 4, blockBucket = blockBucket)
+        .select($"global_sequence", $"batch_seq").as[(Long, Long)].collect().toMap
+    val straddling = seqs(50L)
+    assert(straddling.size === 31)
+    assert(straddling === straddling.keys.toSeq.sorted.zipWithIndex
+      .map { case (gs, i) => gs -> (i / 4).toLong }.toMap)
+    assert(straddling === seqs(1000000L))
+    assert(straddling === seqs(8L))
+  }
+
   test("handoff: no gap, no duplicates across the live seam (ST4)") {
     val historySlice = history.filter($"block_num" <= 180)   // replay covers ≤ 180
     val liveSlice = history.filter($"block_num" >= 170)      // live attached at 170 (overlap!)
@@ -402,19 +419,14 @@ class IngestSpec extends SparkSpec {
     val q = Ingest.startActionIngest(
       spark.readStream.schema(all.schema).parquet(raw), out, ckpt,
       partitionSize = 100L, trigger = Trigger.ProcessingTime("250 milliseconds"))
-    def countOut(): Long =
-      try spark.read.parquet(out).count() catch { case _: Exception => -1L }
-    def awaitCount(expect: Long): Unit = {
-      val deadline = System.currentTimeMillis() + 90000
-      while (countOut() != expect && System.currentTimeMillis() < deadline)
-        Thread.sleep(250)
-      assert(countOut() === expect)
-    }
     try {
-      awaitCount(20) // backfill chunk lands while the query keeps running
+      // backfill chunk lands while the query keeps running
+      q.processAllAvailable()
+      assert(spark.read.parquet(out).count() === 20)
       // the live tail arrives AFTER the stream started — no restart
       all.filter(col("block_num") >= 120).write.mode("append").parquet(raw)
-      awaitCount(40)
+      q.processAllAvailable()
+      assert(spark.read.parquet(out).count() === 40)
       val hist = spark.read.parquet(out)
       assert(hist.select($"global_sequence").distinct().count() === 40)
       // fork seam: the head block is retracted; the live view drops its rows
@@ -422,6 +434,9 @@ class IngestSpec extends SparkSpec {
       val live = graft.state.Forks.liveView(hist, tombs)
       assert(live.count() === 39)
       assert(live.filter($"block_num" === 139L).count() === 0)
-    } finally q.stop()
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
   }
 }
